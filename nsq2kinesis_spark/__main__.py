@@ -115,19 +115,11 @@ def build_arg_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--epoch-guard-dir", default=None, help="idempotent-replay marker dir")
     p.add_argument("--trigger-interval", default="1 second")
-    p.add_argument("--partitioned", action="store_true", help="executor-parallel NSQ reader")
-    p.add_argument("--num-partitions", type=int, default=4)
     # requeue policy (reference main.go:66-67 DefaultRequeueDelay + go-nsq
     # MaxAttempts): failed-batch REQ backoff base/cap and the dead-letter cap
     p.add_argument("--requeue-base-ms", type=int, default=None)
     p.add_argument("--requeue-max-ms", type=int, default=None)
     p.add_argument("--max-attempts", type=int, default=None)
-    p.add_argument(
-        "--consumer-instance-id",
-        default=None,
-        help="namespace the executor consumer cache (only needed when several "
-        "partitioned queries share one topic+channel in one app)",
-    )
     p.add_argument("--cpus", type=int, default=None, help="local[] cores (default: all)")
     p.add_argument("--version", action="store_true", help="show version and exit")
     return p
@@ -141,16 +133,8 @@ def reader_options(args: argparse.Namespace) -> dict[str, str]:
         "channel": args.channel,
         "nsqd_tcp_address": args.nsqd_tcp_address,
     }
-    if args.partitioned:
-        opts["partitioned"] = "true"
-        opts["num_partitions"] = str(args.num_partitions)
-    for flag, opt in (
-        ("requeue_base_ms", "requeue_base_ms"),
-        ("requeue_max_ms", "requeue_max_ms"),
-        ("max_attempts", "max_attempts"),
-        ("consumer_instance_id", "consumer_instance_id"),
-    ):
-        value = getattr(args, flag)
+    for opt in ("requeue_base_ms", "requeue_max_ms", "max_attempts"):
+        value = getattr(args, opt)
         if value is not None:
             opts[opt] = str(value)
     return opts
@@ -307,7 +291,6 @@ def main(argv: list[str] | None = None) -> int:
         channel=args.channel,
         nsqd=args.nsqd_tcp_address,
         stream=args.stream,
-        partitioned=args.partitioned,
     )
 
     if args.test and not args.spool_dir:

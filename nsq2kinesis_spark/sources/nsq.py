@@ -20,16 +20,16 @@ The NSQ TCP wire protocol spoken here (V2 magic, SUB/RDY/FIN/REQ/TOUCH/
 NOP, 4-byte size + frame-type framing, 26-byte message header) is the
 public protocol documented at https://nsq.io/clients/tcp_protocol_spec.html.
 
-Two reader tiers, same schema and at-least-once contract:
-
-- default: ``SimpleDataSourceStreamReader`` — one connection on the
-  driver; simplest, fine for modest topics.
-- ``.option("partitioned", "true")`` (+ ``num_partitions``): full
-  ``DataSourceStreamReader`` — N executor-side connections consuming the
-  same channel in parallel (nsqd load-balances a channel across its
-  connections), mirroring the reference's 20 concurrent handlers
-  (main.go:122). This is the 100 TB ingest path: the driver only issues
-  batch seqs and the committed watermark; all socket I/O is on executors.
+One reader tier: the connection lives in the Python process that serves
+the source on the driver, the shape of the reference's single go-nsq
+consumer (main.go:61-75,122). nsqd pushes up to ``max_records_per_trigger``
+messages ahead (RDY), so one connection keeps a micro-batch fed, and the
+work after the scan (dedup, packing, PutRecords) runs in parallel across
+executors. One connection per Spark input partition measured worse on
+``perfbench``'s ``forward_small`` (4-core host): ~9x slower to drain (38
+vs 345 rec/s median) at about twice the p50 forwarding latency, because
+each Python worker held a connection that nsqd kept filling while its
+FINs waited for a task to land in that worker again.
 """
 
 from __future__ import annotations
@@ -40,12 +40,7 @@ import time
 from datetime import datetime, timezone
 
 import pyspark.cloudpickle as _cloudpickle
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -55,10 +50,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# The registered DataSource is pickled into Spark's dedicated Python
-# planner/worker processes, which don't import user packages from disk.
-# Pickle this module by value so the classes travel inside the pickle —
-# no PYTHONPATH/--py-files coupling for the source.
+# The registered DataSource is pickled into Spark's Python planner process,
+# which imports user packages only from its own path: on a session whose
+# JVM started before this package was importable, and that never shipped
+# it (session.ship_package), a by-reference source fails to plan. Pickle
+# this module by value so the classes travel inside the pickle — no
+# PYTHONPATH/--py-files coupling for the source
+# (tests/test_streaming.py::test_source_plans_on_a_session_started_before_the_package).
 import sys as _sys
 
 from .. import observability as _obs
@@ -406,232 +404,11 @@ class NsqStreamReader(SimpleDataSourceStreamReader):
             self._reset_connection()
 
 
-class NsqInputPartition(InputPartition):
-    """One executor-side NSQ consumer slot for one microbatch. Carries the
-    batch's seq and the driver's committed watermark so the executor knows
-    which earlier batches' messages are safe to FIN."""
-
-    def __init__(self, pid: int, batch_seq: int, committed_seq: int, rdy: int) -> None:
-        self.pid = pid
-        self.batch_seq = batch_seq
-        self.committed_seq = committed_seq
-        self.rdy = rdy
-
-
-class _ExecutorConsumer:
-    """Per-(source, partition) consumer living in an executor Python worker
-    process, persisting across microbatch tasks via the builtins-anchored
-    cache (_executor_consumers below) — Spark reuses worker processes, so
-    in steady state each partition keeps one long-lived connection, like
-    one of the reference's 20 concurrent handlers, main.go:122."""
-
-    def __init__(self, addr: str, topic: str, channel: str, rdy: int) -> None:
-        self.conn = NsqConnection(addr, topic, channel, rdy=rdy)
-        # batch_seq -> [(msg_id, attempts)]
-        self.pending: dict[int, list[tuple[str, int]]] = {}
-        self.dead_lettered = 0
-        self.last_used = time.monotonic()
-
-
-# A stopped/restarted query's consumers are never read again, but their
-# sockets would otherwise stay open until nsqd's missed-heartbeat
-# disconnect. Entries idle this long are closed by whichever task next
-# runs in the same worker; their un-FINned messages redeliver (the normal
-# at-least-once orphan path).
-CONSUMER_IDLE_EVICT_S = 300.0
-
-
-def _evict_idle_consumers(
-    consumers: dict, now: float, ttl_s: float = CONSUMER_IDLE_EVICT_S
-) -> None:
-    # Only consumers with no message awaiting FIN are evictable: a live
-    # query with a trigger interval longer than the TTL legitimately
-    # leaves its consumer idle between micro-batches, and closing it
-    # while batches await their deferred FIN would redeliver EVERY batch
-    # forever (the FIN rides the delivering connection). A truly orphaned
-    # consumer with pending messages stops answering heartbeats, so nsqd
-    # reaps the connection itself; the dead cache entry then fails its
-    # next use (if any) and is dropped by read()'s ConnectionError path.
-    # NOTE: read() always records a batch entry (possibly an EMPTY list on
-    # a quiet topic), so the check must be "no message ids anywhere", not
-    # "dict empty" — the latter never holds for an abandoned consumer.
-    for key in [
-        k
-        for k, c in consumers.items()
-        if now - c.last_used > ttl_s and not any(c.pending.values())
-    ]:
-        stale = consumers.pop(key)
-        try:
-            stale.conn.close()
-        except OSError:
-            pass
-
-
-def _executor_consumers() -> dict[tuple, _ExecutorConsumer]:
-    """Process-global consumer cache for executor Python workers.
-
-    This module travels pickled BY VALUE (see register_pickle_by_value
-    above), so a plain module global would be rebuilt on every task
-    deserialization — connections and pending-FIN state would die with
-    each task and no FIN would ever be sent. Anchoring the dict on
-    ``builtins`` (always imported, never re-created) makes it genuinely
-    process-scoped: it survives across microbatch tasks in a reused
-    worker, which is what keeps one long-lived connection per partition."""
-    import builtins
-
-    cache = getattr(builtins, "_nsq2kinesis_executor_consumers", None)
-    if cache is None:
-        cache = {}
-        builtins._nsq2kinesis_executor_consumers = cache
-    return cache
-
-
-class NsqPartitionedStreamReader(DataSourceStreamReader):
-    """Executor-parallel NSQ reader: N partitions → N nsqd connections
-    consuming the same channel (nsqd load-balances a channel's messages
-    across its connections — the reference's AddConcurrentHandlers(h, 20),
-    main.go:122, is the same fan-out inside one process).
-
-    At-least-once without offset replay (same contract as the simple
-    reader): each executor task polls its partition's connection, the
-    driver embeds the committed batch watermark in the NEXT batch's
-    partitions, and the executor FINs a batch's messages only once that
-    watermark passes it — deferred ack, one batch of lag. Whenever the
-    partition→worker-process mapping shifts (task retry, worker churn,
-    restart), the orphaned connection's un-FINned messages redeliver via
-    NSQ msg-timeout to whichever connection now serves the channel, and
-    the downstream dedup stage absorbs the duplicates. FIN must ride the
-    connection that received the message, so cross-worker acks are
-    impossible by protocol — redelivery-plus-dedup is the NSQ-native
-    recovery path, not a shortcut."""
-
-    def __init__(self, options: dict) -> None:
-        self.addr = options.get("nsqd_tcp_address", "127.0.0.1:4150")
-        self.topic = options["topic"]
-        self.channel = options.get("channel", "spark")
-        self.num_partitions = int(options.get("num_partitions", "4"))
-        self.batch_size = int(options.get("max_records_per_trigger", "1000"))
-        self.poll_wait_s = float(options.get("poll_wait_s", "0.5"))
-        self.requeue_base_ms = int(options.get("requeue_base_ms", DEFAULT_REQUEUE_BASE_MS))
-        self.requeue_max_ms = int(options.get("requeue_max_ms", DEFAULT_REQUEUE_MAX_MS))
-        self.max_attempts = int(options.get("max_attempts", DEFAULT_MAX_ATTEMPTS))
-        # Namespaces the executor-side consumer cache. Default "" shares
-        # consumers per (addr, topic, channel, pid) ACROSS query restarts —
-        # that is what lets a restart replaying a batch into a still-alive
-        # worker find its pending map and REQ the failed attempt instead of
-        # waiting out msg-timeout. Two CONCURRENT queries on the same
-        # topic+channel in one app (a degenerate config — they'd split the
-        # stream anyway) must set distinct ids to keep their pending-FIN
-        # maps disjoint; there is no Spark-provided stable query id visible
-        # to a Python DataSource, so this is an explicit option rather than
-        # an inferred one.
-        self.instance_id = options.get("consumer_instance_id", "")
-        self._seq = 0
-        self._committed = 0
-
-    # -- driver side --
-
-    def initialOffset(self) -> dict:
-        return {"seq": 0}
-
-    def latestOffset(self) -> dict:
-        self._seq += 1
-        return {"seq": self._seq}
-
-    def partitions(self, start: dict, end: dict) -> list[NsqInputPartition]:
-        # On restart self._seq resumes behind the checkpoint; keep issuing
-        # offsets ahead of the replayed batch.
-        self._seq = max(self._seq, end["seq"])
-        per_part = max(1, self.batch_size // self.num_partitions)
-        return [
-            NsqInputPartition(i, start["seq"], self._committed, per_part)
-            for i in range(self.num_partitions)
-        ]
-
-    def commit(self, end: dict) -> None:
-        self._committed = end["seq"]
-
-    def stop(self) -> None:
-        pass
-
-    # -- executor side --
-
-    def read(self, partition: NsqInputPartition):
-        consumers = _executor_consumers()
-        _evict_idle_consumers(consumers, time.monotonic())
-        key = (self.addr, self.topic, self.channel, self.instance_id, partition.pid)
-        consumer = consumers.get(key)
-        if consumer is None:
-            try:
-                consumer = _ExecutorConsumer(
-                    self.addr, self.topic, self.channel, partition.rdy
-                )
-            except (ConnectionError, OSError) as e:
-                # broker down (restart in progress): this batch is empty;
-                # the next task retries the connection — failing the TASK
-                # here would fail the whole query on a transient outage
-                _obs.log_event(
-                    "nsq_source",
-                    "connect_failed",
-                    addr=self.addr,
-                    partition=partition.pid,
-                    error=str(e),
-                )
-                return iter([])
-            consumers[key] = consumer
-        consumer.last_used = time.monotonic()
-        try:
-            # ack batches the driver has committed (deferred FIN)
-            for seq in sorted(s for s in consumer.pending if s < partition.committed_seq):
-                for msg_id, _attempts in consumer.pending.pop(seq):
-                    consumer.conn.finish(msg_id)
-            if partition.batch_seq in consumer.pending:
-                # This batch seq ran before on this consumer and never
-                # committed (task retry, or a crash-restart replaying the
-                # batch into a still-alive worker): REQ the failed
-                # attempt's messages with attempts-scaled backoff — sooner
-                # than msg-timeout, but never a hot loop; past the cap
-                # they dead-letter (reference kinesis_writer.go:114-126 +
-                # main.go:66-67).
-                consumer.dead_lettered += requeue_failed(
-                    consumer.conn,
-                    consumer.pending.pop(partition.batch_seq),
-                    self.requeue_base_ms,
-                    self.requeue_max_ms,
-                    self.max_attempts,
-                )
-            # keep not-yet-committed batches alive while the sink works
-            for ids in consumer.pending.values():
-                for msg_id, _attempts in ids:
-                    consumer.conn.touch(msg_id)
-            msgs = consumer.conn.poll(partition.rdy, self.poll_wait_s)
-        except (ConnectionError, OSError) as e:
-            # Reconnect on the next task; this connection's un-FINned
-            # messages redeliver via msg-timeout (at-least-once holds).
-            _obs.log_event(
-                "nsq_source",
-                "connection_lost",
-                addr=self.addr,
-                partition=partition.pid,
-                error=str(e),
-            )
-            consumers.pop(key, None)
-            try:
-                consumer.conn.sock.close()
-            except OSError:
-                pass
-            return iter([])
-        consumer.pending[partition.batch_seq] = [(m[0], m[3]) for m in msgs]
-        return iter([(m[0], m[1], m[2], m[3], None) for m in msgs])
-
-
 class NsqDataSource(DataSource):
     """``spark.readStream.format("nsq")`` — options: topic, channel,
-    nsqd_tcp_address, max_records_per_trigger, poll_wait_s, requeue_base_ms
-    / requeue_max_ms / max_attempts (failed-batch backoff + dead-letter
-    policy), partitioned=true (+ num_partitions) for the executor-parallel
-    reader, and consumer_instance_id to namespace the executor consumer
-    cache when several partitioned queries share one topic+channel."""
+    nsqd_tcp_address, max_records_per_trigger, poll_wait_s, and
+    requeue_base_ms / requeue_max_ms / max_attempts (failed-batch backoff
+    + dead-letter policy)."""
 
     @classmethod
     def name(cls) -> str:
@@ -639,18 +416,6 @@ class NsqDataSource(DataSource):
 
     def schema(self) -> StructType:
         return MESSAGE_SCHEMA
-
-    def streamReader(self, schema: StructType) -> NsqPartitionedStreamReader:
-        if self.options.get("partitioned", "false").lower() != "true":
-            # Signals pyspark's _streamReader to fall back to the simple
-            # driver-side reader below.
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
-        return NsqPartitionedStreamReader(self.options)
 
     def simpleStreamReader(self, schema: StructType) -> NsqStreamReader:
         return NsqStreamReader(self.options)

@@ -253,14 +253,19 @@ class KinesisSink:
             self._epoch_ns = ns
         return self._epoch_ns
 
-    def _epoch_marker(self, epoch_id: int) -> str | None:
+    def _epoch_marker(self) -> str | None:
+        """The query's one marker file, holding the last delivered epoch
+        id. foreachBatch epoch ids only grow within a query and only the
+        last uncommitted epoch can replay, so one marker per query id,
+        replaced after each delivery, guards every replay in bounded
+        space."""
         if self.epoch_guard_dir is None:
             return None
         import os
 
         os.makedirs(self.epoch_guard_dir, exist_ok=True)
         return os.path.join(
-            self.epoch_guard_dir, f"epoch-{self._epoch_namespace()}-{epoch_id}.done"
+            self.epoch_guard_dir, f"epoch-{self._epoch_namespace()}.last"
         )
 
     def __call__(self, batch_df, epoch_id: int) -> None:
@@ -268,15 +273,18 @@ class KinesisSink:
 
         # Epoch guard (optional): foreachBatch replays the last uncommitted
         # epoch after a failure/restart — Spark's contract is at-least-once
-        # per epoch with a STABLE epoch_id. Recording delivered epoch ids
-        # turns the replay into a no-op: effectively-once into a
+        # per epoch with a STABLE epoch_id. Recording the last delivered
+        # epoch id turns the replay into a no-op: effectively-once into a
         # non-transactional sink (the standard idempotent-foreachBatch
         # pattern; the reference instead relied on downstream dedup alone).
-        marker = self._epoch_marker(epoch_id)
+        marker = self._epoch_marker()
         if marker is not None:
-            import os
-
-            if os.path.exists(marker):
+            try:
+                with open(marker) as fh:
+                    last_delivered = int(fh.read())
+            except FileNotFoundError:
+                last_delivered = -1  # nothing delivered yet
+            if epoch_id <= last_delivered:
                 return
 
         stream = self.stream
@@ -381,6 +389,12 @@ class KinesisSink:
         )
         if marker is not None:
             # written only after every chunk delivered — a crash before this
-            # point replays the epoch (at-least-once), after it skips cleanly
-            with open(marker, "w") as fh:
-                fh.write("")
+            # point replays the epoch (at-least-once), after it skips
+            # cleanly; os.replace keeps a crash mid-write from leaving a
+            # torn marker
+            import os
+
+            tmp = f"{marker}.tmp"
+            with open(tmp, "w") as fh:
+                fh.write(str(epoch_id))
+            os.replace(tmp, marker)

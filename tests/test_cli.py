@@ -46,23 +46,18 @@ def test_env_fallbacks(monkeypatch):
 
 
 def test_reader_options_from_flags():
-    """Requeue-policy and consumer-namespace flags flow into the NSQ
-    DataSource options (stringly, per the DataSource V2 contract); unset
-    flags leave the source's own defaults in charge."""
+    """Requeue-policy flags flow into the NSQ DataSource options
+    (stringly, per the DataSource V2 contract); unset flags leave the
+    source's own defaults in charge."""
     from nsq2kinesis_spark.__main__ import reader_options
 
     args = build_arg_parser().parse_args(
         ["--topic", "t", "--stream", "s", "--checkpoint-dir", "c",
-         "--partitioned", "--num-partitions", "8",
-         "--requeue-base-ms", "500", "--max-attempts", "7",
-         "--consumer-instance-id", "qa"]
+         "--requeue-base-ms", "500", "--max-attempts", "7"]
     )
     opts = reader_options(args)
-    assert opts["partitioned"] == "true"
-    assert opts["num_partitions"] == "8"
     assert opts["requeue_base_ms"] == "500"
     assert opts["max_attempts"] == "7"
-    assert opts["consumer_instance_id"] == "qa"
     assert "requeue_max_ms" not in opts  # unset → source default
 
     plain = reader_options(

@@ -147,8 +147,10 @@ def test_q106_mirror_single_dots_execution(spark):
     assert dots_exchange_count() == 1
     # arm the cached-profile state (what an earlier ANN-lane build leaves
     # behind in a shared session), then re-check
-    ann_user_similarity(spark, "/root/testdata/sf0.001")
+    from .conftest import SF_SMOKE
+
     try:
+        ann_user_similarity(spark, SF_SMOKE)
         assert dots_exchange_count() == 1
     finally:
         spark.catalog.clearCache()

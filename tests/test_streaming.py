@@ -240,8 +240,109 @@ def test_nsq_to_kinesis_end_to_end(spark, tmp_path):
     for pk, data in received:
         assert pk  # partition key always present
     assert nsqd.subscribed == ("events", "spark")
+    # one reader holds one connection for the whole run; connections must
+    # not grow with Python workers or batches
+    assert nsqd.n_connections == 1
     assert set(nsqd.finished) <= set(bodies) | {oversize_id}
     assert len(nsqd.finished) >= 1  # commit() FINed consumed batches
+
+
+# Run in a fresh interpreter by the test below: the JVM and its Python
+# planner start before the package is importable, as when a caller builds
+# its own SparkSession and only then puts the package on sys.path.
+_PLAN_SOURCE_SCRIPT = """
+import json, os, sys, time
+
+from pyspark.sql import SparkSession
+
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+spark.sparkContext.setLogLevel("ERROR")
+sys.path.insert(0, sys.argv[1])  # only now is the package importable
+
+import pyspark.cloudpickle as cloudpickle
+
+from nsq2kinesis_spark.session import pin_session_conf
+from nsq2kinesis_spark.sources import nsq
+from tests.fake_nsqd import FakeNsqd
+
+
+def drain(tag):
+    ids = {f"{tag}{i:015d}" for i in range(8)}
+    nsqd = FakeNsqd([(i, b"body") for i in sorted(ids)])
+    nsqd.start()
+    seen = set()
+    try:
+        try:
+            spark.dataSource.register(nsq.NsqDataSource)  # pickles the class
+            query = (
+                spark.readStream.format("nsq")
+                .options(topic="t", channel="c", nsqd_tcp_address=nsqd.addr,
+                         poll_wait_s="0.2")
+                .load()
+                .writeStream.foreachBatch(
+                    lambda df, _e: seen.update(
+                        r.message_id for r in df.select("message_id").collect()
+                    )
+                )
+                .option("checkpointLocation", os.path.abspath(f"ckpt-{tag}"))
+                .trigger(processingTime="500 milliseconds")
+                .start()
+            )
+        except Exception as exc:
+            return {"seen": 0, "error": str(exc)}
+        deadline = time.time() + 60
+        while not ids <= seen and query.exception() is None and time.time() < deadline:
+            time.sleep(0.3)
+        query.stop()
+        exc = query.exception()
+        return {"seen": len(ids & seen), "error": None if exc is None else str(exc)}
+    finally:
+        nsqd.stop()
+
+
+out = {"unshipped_by_value": drain("a")}
+cloudpickle.unregister_pickle_by_value(nsq)
+out["unshipped_by_reference"] = drain("b")
+cloudpickle.register_pickle_by_value(nsq)
+pin_session_conf(spark)  # ship_package: addPyFile of the package zip
+out["shipped_by_value"] = drain("c")
+cloudpickle.unregister_pickle_by_value(nsq)
+out["shipped_by_reference"] = drain("d")
+print(json.dumps(out))
+spark.stop()
+"""
+
+
+@pytest.mark.slow
+@pytest.mark.timeout(300)
+def test_source_plans_on_a_session_started_before_the_package(tmp_path):
+    """Why sources/nsq.py is pickled by value. A SparkSession whose JVM
+    started before the package was importable has a Python planner that
+    cannot import it: pickled by reference, the source fails to plan with
+    ModuleNotFoundError. Pickled by value it plans and drains with no
+    shipping at all, so a session that never calls ``pin_session_conf``
+    (``get_spark`` alone ships nothing) still works. Once
+    ``pin_session_conf`` has shipped the package zip, the zip does reach
+    the planner, so the source drains either way."""
+    import json
+    import subprocess
+    import sys
+
+    script = tmp_path / "plan_source.py"
+    script.write_text(_PLAN_SOURCE_SCRIPT)
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, str(script), repo_root],
+        cwd=tmp_path, env=env, capture_output=True, timeout=280,
+    )
+    assert proc.returncode == 0, proc.stderr.decode(errors="replace")[-3000:]
+    out = json.loads(proc.stdout.decode().strip().splitlines()[-1])
+    for phase in ("unshipped_by_value", "shipped_by_value", "shipped_by_reference"):
+        assert out[phase] == {"seen": 8, "error": None}, (phase, out[phase])
+    unshipped = out["unshipped_by_reference"]
+    assert unshipped["seen"] == 0
+    assert "No module named 'nsq2kinesis_spark'" in unshipped["error"]
 
 
 # --- streaming windowed agg vs batch twin -----------------------------------
@@ -774,89 +875,18 @@ def test_restart_with_uncommitted_batch_recovers(spark, tmp_path):
     assert set(nsqd.finished) <= set(bodies)
 
 
-@pytest.mark.slow
-@pytest.mark.timeout(240)
-def test_partitioned_source_parallel_consumption(spark, tmp_path):
-    """Executor-parallel NSQ source (§2A-1 scale path): partitioned=true
-    opens one nsqd connection per input partition, the fake nsqd
-    load-balances the channel across them, and every body reaches the
-    sink exactly once after dedup. Deferred ack: FINs trail by one batch
-    (committed watermark rides the next batch's partitions), so consumed
-    messages get acked only after their batch commits."""
-    from nsq2kinesis_spark.sources.nsq import NsqDataSource
-
-    bodies = {f"{i:016d}": f"p-{i}".encode() for i in range(60)}
-    nsqd = FakeNsqd(list(bodies.items()), msg_timeout_s=5.0)
-    nsqd.start()
-    spark.dataSource.register(NsqDataSource)
-    spool = tmp_path / "pspool"
-    spool.mkdir()
-
-    src = (
-        spark.readStream.format("nsq")
-        .option("topic", "t")
-        .option("channel", "c")
-        .option("nsqd_tcp_address", nsqd.addr)
-        .option("partitioned", "true")
-        .option("num_partitions", "3")
-        .option("poll_wait_s", "0.3")
-        .load()
-    )
-    sink = KinesisSink(
-        stream="test", client_factory=lambda: SpoolingKinesisClient(str(spool))
-    )
-    config = PipelineConfig(
-        checkpoint_dir=str(tmp_path / "pckpt"),
-        trigger_processing_time="500 milliseconds",
-    )
-
-    def spool_bodies() -> set[bytes]:
-        got: set[bytes] = set()
-        for _pk, data in read_spool(str(spool)):
-            if is_aggregated(data):
-                got.update(d for _, d in deaggregate(data))
-            else:
-                got.add(data)
-        return got
-
-    q = build_pipeline(src, sink, config)
-    try:
-        deadline = time.time() + 150
-        while time.time() < deadline and not (
-            spool_bodies() == set(bodies.values()) and nsqd.finished
-        ):
-            time.sleep(1)
-        assert q.exception() is None, q.exception()
-    finally:
-        q.stop()
-        nsqd.stop()
-
-    assert spool_bodies() == set(bodies.values())
-    # the channel was actually consumed in parallel: one connection per
-    # partition (more only if a worker-shift forced a reconnect)
-    assert nsqd.n_connections >= 3
-    # deferred ack happened and never acked an unknown id
-    assert nsqd.finished
-    assert set(nsqd.finished) <= set(bodies)
-
-
 def test_failed_batch_requeues_immediately_not_after_timeout():
     """Replaying an uncommitted batch seq REQs the failed attempt's
     messages for redelivery; without REQ they'd only come back after the
     server msg-timeout (set to 60 s here, far beyond the test's own
     runtime, so a pass proves REQ — not timeout — recovered them).
     ``requeue_base_ms=0`` pins the backoff to zero so redelivery is
-    immediate; the default backoff policy has its own test below.
-    Covers both reader tiers (reference kinesis_writer.go:114-126)."""
-    from nsq2kinesis_spark.sources.nsq import (
-        NsqInputPartition,
-        NsqPartitionedStreamReader,
-        NsqStreamReader,
-    )
+    immediate; the default backoff policy has its own test below
+    (reference kinesis_writer.go:114-126). Batches still awaiting commit
+    are TOUCHed on the next read."""
+    from nsq2kinesis_spark.sources.nsq import NsqStreamReader
 
     bodies = {f"{i:016d}": f"q-{i}".encode() for i in range(6)}
-
-    # -- simple (driver-side) reader: re-read of the same seq --
     nsqd = FakeNsqd(list(bodies.items()), msg_timeout_s=60.0)
     nsqd.start()
     try:
@@ -873,32 +903,11 @@ def test_failed_batch_requeues_immediately_not_after_timeout():
         assert redelivered == set(bodies.values())  # back via REQ
         assert time.time() - t0 < 30, "recovered only via msg-timeout"
         assert set(nsqd.requeued) == set(bodies)
+        # the replayed batch is uncommitted: the next read TOUCHes it
+        list(NsqStreamReader.read(reader, {"seq": 1})[0])
+        assert set(nsqd.touched) == set(bodies)
     finally:
         nsqd.stop()
-
-    # -- partitioned (executor-side) reader: retry of the same batch_seq --
-    nsqd2 = FakeNsqd(list(bodies.items()), msg_timeout_s=60.0)
-    nsqd2.start()
-    try:
-        reader2 = NsqPartitionedStreamReader(
-            {"topic": "t", "channel": "c", "nsqd_tcp_address": nsqd2.addr,
-             "poll_wait_s": "0.5", "num_partitions": "1", "requeue_base_ms": "0"}
-        )
-        part = NsqInputPartition(pid=0, batch_seq=1, committed_seq=1, rdy=100)
-        first = list(reader2.read(part))
-        assert len(first) == len(bodies)
-        replayed = {r[1] for r in reader2.read(part)}  # same batch_seq again
-        assert replayed == set(bodies.values())
-        assert set(nsqd2.requeued) == set(bodies)
-        # pending batches get TOUCHed on subsequent reads
-        part2 = NsqInputPartition(pid=0, batch_seq=2, committed_seq=1, rdy=100)
-        list(reader2.read(part2))
-        assert set(nsqd2.touched) == set(bodies)
-    finally:
-        import builtins
-
-        getattr(builtins, "_nsq2kinesis_executor_consumers", {}).clear()
-        nsqd2.stop()
 
 
 def test_requeue_delay_backoff_shape():
@@ -923,8 +932,7 @@ def test_poison_message_backs_off_and_dead_letters():
     """A batch that keeps failing REQs its messages with growing delay and,
     at the attempts cap, dead-letters them (FIN + structured log) instead
     of hot-looping (reference main.go:66-67 DefaultRequeueDelay + go-nsq
-    MaxAttempts semantics). Exercised on the simple reader; the
-    partitioned tier shares requeue_failed()."""
+    MaxAttempts semantics)."""
     from nsq2kinesis_spark.sources.nsq import NsqStreamReader, requeue_delay_ms
 
     nsqd = FakeNsqd([("poison-msg-00001", b"bad")], msg_timeout_s=60.0)
@@ -1040,99 +1048,6 @@ def test_metrics_listener_exports_progress(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_idle_consumers_evicted():
-    """Pending-free consumers a stopped query abandons are closed by the
-    next task in the same worker once idle past the TTL, instead of
-    holding sockets until nsqd's missed-heartbeat disconnect. Consumers
-    with batches still awaiting deferred FIN are NEVER evicted — a live
-    query triggering slower than the TTL must not lose its acking
-    connection (nsqd reaps genuinely dead ones via heartbeat itself)."""
-    import builtins
-
-    from nsq2kinesis_spark.sources.nsq import (
-        NsqInputPartition,
-        NsqPartitionedStreamReader,
-    )
-
-    bodies = {f"{i:016d}": f"x-{i}".encode() for i in range(4)}
-    nsqd = FakeNsqd(list(bodies.items()), msg_timeout_s=60.0)
-    nsqd.start()
-    try:
-        opts = {"topic": "t", "channel": "c", "nsqd_tcp_address": nsqd.addr,
-                "poll_wait_s": "0.3", "num_partitions": "1"}
-        r_old = NsqPartitionedStreamReader({**opts, "consumer_instance_id": "old"})
-        part = NsqInputPartition(pid=0, batch_seq=1, committed_seq=0, rdy=2)
-        list(r_old.read(part))
-        cache = getattr(builtins, "_nsq2kinesis_executor_consumers", {})
-        old_key = (nsqd.addr, "t", "c", "old", 0)
-        assert old_key in cache
-        # age the old consumer past the TTL while it still has pending
-        # batches: it must survive eviction (slow-trigger liveness)
-        cache[old_key].last_used -= 10_000
-        r_new = NsqPartitionedStreamReader({**opts, "consumer_instance_id": "new"})
-        list(r_new.read(part))
-        assert old_key in cache  # pending message ids → exempt
-        # once no message awaits FIN — the realistic abandoned state is a
-        # dict of EMPTY batch lists (read() records one per batch even on
-        # a quiet topic) — the same idle age makes it evictable
-        cache[old_key].pending = {7: [], 8: []}
-        cache[old_key].last_used -= 10_000
-        part2 = NsqInputPartition(pid=0, batch_seq=2, committed_seq=1, rdy=2)
-        list(r_new.read(part2))
-        assert old_key not in cache
-        assert (nsqd.addr, "t", "c", "new", 0) in cache
-    finally:
-        import builtins as _b
-
-        getattr(_b, "_nsq2kinesis_executor_consumers", {}).clear()
-        nsqd.stop()
-
-
-@pytest.mark.slow
-def test_concurrent_partitioned_readers_have_disjoint_consumers():
-    """Two partitioned readers on the same topic+channel with distinct
-    consumer_instance_id values must not share an executor consumer —
-    their pending-FIN maps stay disjoint (the cache key includes the
-    instance id)."""
-    import builtins
-
-    from nsq2kinesis_spark.sources.nsq import (
-        NsqInputPartition,
-        NsqPartitionedStreamReader,
-    )
-
-    # 8 messages: each connection's RDY budget (2 at connect + 2 at poll)
-    # caps it at 4, so the second consumer is guaranteed deliveries too
-    bodies = {f"{i:016d}": f"x-{i}".encode() for i in range(8)}
-    nsqd = FakeNsqd(list(bodies.items()), msg_timeout_s=60.0)
-    nsqd.start()
-    try:
-        opts = {"topic": "t", "channel": "c", "nsqd_tcp_address": nsqd.addr,
-                "poll_wait_s": "0.3", "num_partitions": "1"}
-        r_a = NsqPartitionedStreamReader({**opts, "consumer_instance_id": "qa"})
-        r_b = NsqPartitionedStreamReader({**opts, "consumer_instance_id": "qb"})
-        part = NsqInputPartition(pid=0, batch_seq=1, committed_seq=0, rdy=2)
-        got_a = list(r_a.read(part))
-        got_b = list(r_b.read(part))
-        cache = getattr(builtins, "_nsq2kinesis_executor_consumers", {})
-        keys = [k for k in cache if k[0] == nsqd.addr]
-        assert len(keys) == 2  # one consumer per instance id
-        ca = cache[(nsqd.addr, "t", "c", "qa", 0)]
-        cb = cache[(nsqd.addr, "t", "c", "qb", 0)]
-        ids_a = {m for m, _ in ca.pending[1]}
-        ids_b = {m for m, _ in cb.pending[1]}
-        assert ids_a == {r[0] for r in got_a}
-        assert ids_b == {r[0] for r in got_b}
-        assert ids_a.isdisjoint(ids_b)  # nsqd split the channel; no overlap
-        assert ids_a and ids_b
-    finally:
-        import builtins as _b
-
-        getattr(_b, "_nsq2kinesis_executor_consumers", {}).clear()
-        nsqd.stop()
-
-
-@pytest.mark.slow
 @pytest.mark.timeout(120)
 def test_watermark_drops_late_data(spark, tmp_path):
     """Late-data drop (§2B watermark row): batch 1 advances the watermark
@@ -1241,7 +1156,7 @@ def test_epoch_guard_makes_replay_idempotent(spark, tmp_path):
     """foreachBatch replays the last epoch after restart; with
     epoch_guard_dir set, a replayed (same epoch_id) delivery is a no-op —
     effectively-once into a non-transactional sink. A NEW epoch still
-    delivers."""
+    delivers, and the guard keeps one marker per query, not per epoch."""
     df = spark.createDataFrame(
         [(f"m{i}", f"b-{i}".encode()) for i in range(10)],
         "message_id string, body binary",
@@ -1266,6 +1181,13 @@ def test_epoch_guard_makes_replay_idempotent(spark, tmp_path):
     assert spool_count() == 10
     sink(df, 8)  # genuinely new epoch → delivered
     assert spool_count() == 20
+    for epoch in (9, 10, 11):
+        sink(df, epoch)
+    assert spool_count() == 50
+    # bounded: one marker for the query however many epochs delivered
+    assert len(os.listdir(tmp_path / "eguard")) == 1
+    sink(df, 11)  # replay of the last epoch → still skipped
+    assert spool_count() == 50
 
 
 @pytest.mark.slow
@@ -1311,6 +1233,7 @@ def test_epoch_guard_namespaced_by_query_id(spark, tmp_path):
     rerun = make_sink("run-2")  # recreated checkpoint: epochs restart at 0
     rerun(df, 0)
     assert spool_count() == 20, "new query incarnation must not be skipped"
+    assert len(os.listdir(guard)) == 2  # one marker per query id
 
 
 # --- stream-static enrichment join -------------------------------------------
@@ -1434,73 +1357,6 @@ def test_simple_reader_survives_nsqd_restart(spark, tmp_path):
         )
         assert q.isActive and q.exception() is None, q.exception()
         assert nsqd2.subscribed == ("events", "spark")  # fresh SUB handshake
-    finally:
-        q.stop()
-        nsqd1.stop()
-        if nsqd2 is not None:
-            nsqd2.stop()
-
-
-@pytest.mark.slow
-@pytest.mark.timeout(180)
-def test_partitioned_reader_survives_nsqd_restart(spark, tmp_path):
-    """The executor-parallel reader's reconnect path, end-to-end: kill the
-    broker under a running partitioned query, restart it at the same
-    address, and the same query (N connections, deferred FIN) must
-    deliver the post-restart messages without failing."""
-    from nsq2kinesis_spark.sources.nsq import NsqDataSource
-
-    first = {f"{i:016d}": f"a-{i}".encode() for i in range(6)}
-    second = {f"{i:016d}": f"b-{i}".encode() for i in range(20, 26)}
-    nsqd1 = FakeNsqd(list(first.items()), msg_timeout_s=5.0)
-    nsqd1.start()
-    port = int(nsqd1.addr.rsplit(":", 1)[1])
-    spark.dataSource.register(NsqDataSource)
-
-    src = (
-        spark.readStream.format("nsq")
-        .option("topic", "t")
-        .option("channel", "c")
-        .option("nsqd_tcp_address", nsqd1.addr)
-        .option("partitioned", "true")
-        .option("num_partitions", "2")
-        .option("poll_wait_s", "0.3")
-        .load()
-    )
-    name = f"preconn_{uuid.uuid4().hex[:8]}"
-    q = (
-        src.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    nsqd2 = None
-    try:
-        def seen() -> set[str]:
-            return {
-                r["message_id"]
-                for r in spark.sql(f"SELECT message_id FROM {name}").collect()
-            }
-
-        deadline = time.time() + 60
-        while time.time() < deadline and not (set(first) <= seen()):
-            time.sleep(0.5)
-        assert set(first) <= seen(), "pre-restart messages never arrived"
-
-        nsqd1.stop()
-        time.sleep(3)
-        assert q.isActive and q.exception() is None, q.exception()
-
-        nsqd2 = FakeNsqd(list(second.items()), msg_timeout_s=5.0, port=port)
-        nsqd2.start()
-        deadline = time.time() + 90
-        while time.time() < deadline and not (set(second) <= seen()):
-            time.sleep(0.5)
-        assert set(second) <= seen(), (
-            f"post-restart messages never arrived: {sorted(seen())}"
-        )
-        assert q.isActive and q.exception() is None, q.exception()
     finally:
         q.stop()
         nsqd1.stop()
