@@ -19,19 +19,19 @@ Pandas UDFs where Spark lacks the primitive).
 
 __version__ = "0.1.0"
 
-# Spark's Python workers are separate processes that must import this package
-# to unpickle shipped closures (Python DataSource readers, mapInPandas sink
-# packers). Export our location so workers resolve it regardless of the
-# driver's cwd. (Cluster deployments ship the package via --py-files; this
-# covers local/driver-harness runs.)
-import os as _os
+# Every DataSource, closure and class this package hands to Spark is
+# unpickled in another Python process: the planner, the streaming-source
+# runner or an executor worker. None of them can be relied on to import the
+# package: a session's JVM may start before the package is importable, and
+# the streaming-source runner never receives the files a session ships. So
+# the whole package, submodules included, is pickled by value, and each
+# pickle carries its own code. Without pyspark the package still imports
+# (the KPL codec is pure Python).
 import sys as _sys
 
-_pkg_parent = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-_existing = _os.environ.get("PYTHONPATH", "")
-if _pkg_parent not in _existing.split(_os.pathsep):
-    _os.environ["PYTHONPATH"] = (
-        f"{_pkg_parent}{_os.pathsep}{_existing}" if _existing else _pkg_parent
-    )
-if _pkg_parent not in _sys.path:
-    _sys.path.insert(0, _pkg_parent)
+try:
+    import pyspark.cloudpickle as _cloudpickle
+except ImportError:
+    pass
+else:
+    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])

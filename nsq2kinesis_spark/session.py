@@ -4,68 +4,20 @@ Local-mode defaults mirror what we'd set on a real cluster where it matters
 (AQE, shuffle partitions sized to parallelism, Arrow for the Python edge);
 cluster-only knobs (executor memory/cores, dynamic allocation) are left to
 spark-submit so the same code runs unchanged on a 1000-executor cluster.
+
+Nothing here ships engine code to Spark's Python processes: the package
+registers itself for by-value pickling (``nsq2kinesis_spark/__init__.py``),
+so every DataSource, closure and class it hands to Spark carries its own
+code, on any session, including one the caller built before the package
+was importable. No ``--py-files`` is needed for the engine.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import tempfile
-import zipfile
 
 from pyspark.sql import SparkSession
-
-_SHIPPED_SESSIONS: set[int] = set()
-
-
-def ship_package(spark: SparkSession) -> None:
-    """Make this package importable in Spark's Python worker processes.
-
-    Workers unpickle shipped closures (Python DataSource readers, the
-    mapInPandas sink packer) by importing their defining module — which
-    fails if the session's JVM started before the package was on
-    PYTHONPATH (e.g. a driver harness that builds its own session from an
-    arbitrary cwd). ``addPyFile`` distributes a zip of the package at
-    runtime, cwd-independent; on a cluster this doubles as the --py-files
-    shipping path.
-    """
-    # Dedup on applicationId, not id(spark): a new session allocated at a
-    # recycled object address would otherwise silently skip shipping.
-    app_id = spark.sparkContext.applicationId
-    if app_id in _SHIPPED_SESSIONS:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    # Content-addressed zip name: a PID-keyed name could collide with a
-    # stale zip from an earlier process after PID wraparound and ship old
-    # code; hashing each member's path+mtime+size makes any source change
-    # produce a fresh artifact.
-    import hashlib
-
-    members: list[tuple[str, str]] = []
-    digest = hashlib.sha256()
-    for root, dirs, files in os.walk(pkg_dir):
-        dirs.sort()  # deterministic recursion order — part of the digest
-        for fname in sorted(files):
-            if not fname.endswith(".py"):
-                continue
-            full = os.path.join(root, fname)
-            arc = os.path.join("nsq2kinesis_spark", os.path.relpath(full, pkg_dir))
-            digest.update(arc.encode())
-            with open(full, "rb") as fh:
-                digest.update(fh.read())  # content, not mtime: identical
-                # source (fresh checkout, reinstall) reuses one zip name
-            members.append((full, arc))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"nsq2kinesis_spark_{digest.hexdigest()[:16]}.zip"
-    )
-    if not os.path.exists(zip_path):
-        tmp_path = zip_path + f".tmp{os.getpid()}"
-        with zipfile.ZipFile(tmp_path, "w") as zf:
-            for full, arc in members:
-                zf.write(full, arc)
-        os.replace(tmp_path, zip_path)  # atomic vs concurrent builders
-    spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED_SESSIONS.add(app_id)
 
 
 def get_spark(
@@ -167,7 +119,6 @@ def pin_session_conf(spark: SparkSession) -> None:
     # HUGEINT does — non-ANSI would return NULL and silently drop rows at
     # the (unreachable) ~1e38 boundary.
     spark.conf.set("spark.sql.ansi.enabled", "true")
-    ship_package(spark)
     # events.parquet stores TIMESTAMP(NANOS): Spark has no nanosecond
     # timestamp type, so read as raw int64 nanos and truncate to micros in
     # the loader (tables.table). The DuckDB oracles mirror the truncation

@@ -39,7 +39,6 @@ import struct
 import time
 from datetime import datetime, timezone
 
-import pyspark.cloudpickle as _cloudpickle
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
     BinaryType,
@@ -50,19 +49,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# The registered DataSource is pickled into Spark's Python planner process,
-# which imports user packages only from its own path: on a session whose
-# JVM started before this package was importable, and that never shipped
-# it (session.ship_package), a by-reference source fails to plan. Pickle
-# this module by value so the classes travel inside the pickle — no
-# PYTHONPATH/--py-files coupling for the source
-# (tests/test_streaming.py::test_source_plans_on_a_session_started_before_the_package).
-import sys as _sys
-
 from .. import observability as _obs
-
-_cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-_cloudpickle.register_pickle_by_value(_obs)
 
 FRAME_TYPE_RESPONSE = 0
 FRAME_TYPE_ERROR = 1

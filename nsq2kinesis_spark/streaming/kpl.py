@@ -34,15 +34,7 @@ This module is the sink-side encoder used inside ``foreachBatch``
 from __future__ import annotations
 
 import hashlib
-import sys as _sys
 from dataclasses import dataclass, field
-
-try:  # ship by value into Spark Python workers (see sources/nsq.py)
-    import pyspark.cloudpickle as _cloudpickle
-
-    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-except ImportError:  # pure-Python use without pyspark
-    pass
 
 KPL_MAGIC = b"\xf3\x89\x9a\xc2"
 DEFAULT_TARGET_SIZE = 25_000

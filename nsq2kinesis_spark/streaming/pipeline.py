@@ -122,9 +122,6 @@ def build_pipeline(source_df: DataFrame, sink, config: PipelineConfig):
     SketchMaintenance stage that appends hourly distinct-message HLL
     cells per epoch. Returns the started StreamingQuery.
     """
-    from ..session import ship_package
-
-    ship_package(source_df.sparkSession)
     # let an epoch-guarded sink namespace its markers by this query's id
     if getattr(sink, "checkpoint_dir", "absent") is None:
         sink.checkpoint_dir = config.checkpoint_dir

@@ -257,57 +257,59 @@ from pyspark.sql import SparkSession
 
 spark = SparkSession.builder.master("local[2]").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
-sys.path.insert(0, sys.argv[1])  # only now is the package importable
+repo_root, sf_dir = sys.argv[1], sys.argv[2]
+sys.path.insert(0, repo_root)  # only now is the package importable
 
-import pyspark.cloudpickle as cloudpickle
+pythonpath = os.environ.get("PYTHONPATH")
+import nsq2kinesis_spark
 
-from nsq2kinesis_spark.session import pin_session_conf
-from nsq2kinesis_spark.sources import nsq
+out = {"pythonpath_unchanged": os.environ.get("PYTHONPATH") == pythonpath}
+
+from nsq2kinesis_spark.registry import all_queries
+from nsq2kinesis_spark.sources.nsq import NsqDataSource
+from nsq2kinesis_spark.streaming.kinesis_sink import (
+    KinesisSink, SpoolingKinesisClient, read_spool)
+from nsq2kinesis_spark.streaming.kpl import deaggregate, is_aggregated
+from nsq2kinesis_spark.streaming.pipeline import PipelineConfig, build_pipeline
 from tests.fake_nsqd import FakeNsqd
 
 
-def drain(tag):
-    ids = {f"{tag}{i:015d}" for i in range(8)}
-    nsqd = FakeNsqd([(i, b"body") for i in sorted(ids)])
-    nsqd.start()
-    seen = set()
-    try:
-        try:
-            spark.dataSource.register(nsq.NsqDataSource)  # pickles the class
-            query = (
-                spark.readStream.format("nsq")
-                .options(topic="t", channel="c", nsqd_tcp_address=nsqd.addr,
-                         poll_wait_s="0.2")
-                .load()
-                .writeStream.foreachBatch(
-                    lambda df, _e: seen.update(
-                        r.message_id for r in df.select("message_id").collect()
-                    )
-                )
-                .option("checkpointLocation", os.path.abspath(f"ckpt-{tag}"))
-                .trigger(processingTime="500 milliseconds")
-                .start()
-            )
-        except Exception as exc:
-            return {"seen": 0, "error": str(exc)}
-        deadline = time.time() + 60
-        while not ids <= seen and query.exception() is None and time.time() < deadline:
-            time.sleep(0.3)
-        query.stop()
-        exc = query.exception()
-        return {"seen": len(ids & seen), "error": None if exc is None else str(exc)}
-    finally:
-        nsqd.stop()
+def delivered(spool):
+    got = []
+    for _pk, data in read_spool(spool):
+        if is_aggregated(data):
+            got.extend(d for _, d in deaggregate(data))
+        else:
+            got.append(data)
+    return sorted(got)
 
 
-out = {"unshipped_by_value": drain("a")}
-cloudpickle.unregister_pickle_by_value(nsq)
-out["unshipped_by_reference"] = drain("b")
-cloudpickle.register_pickle_by_value(nsq)
-pin_session_conf(spark)  # ship_package: addPyFile of the package zip
-out["shipped_by_value"] = drain("c")
-cloudpickle.unregister_pickle_by_value(nsq)
-out["shipped_by_reference"] = drain("d")
+bodies = sorted(f"body-{i}".encode() for i in range(8))
+nsqd = FakeNsqd([(f"{i:016d}", b) for i, b in enumerate(bodies)])
+nsqd.start()
+spool = os.path.abspath("spool")
+os.mkdir(spool)
+try:
+    spark.dataSource.register(NsqDataSource)
+    src = (spark.readStream.format("nsq")
+           .options(topic="t", channel="c", nsqd_tcp_address=nsqd.addr, poll_wait_s="0.2")
+           .load())
+    sink = KinesisSink(stream="s", client_factory=lambda: SpoolingKinesisClient(spool))
+    query = build_pipeline(src, sink, PipelineConfig(
+        checkpoint_dir=os.path.abspath("ckpt"), trigger_processing_time="500 milliseconds"))
+    deadline = time.time() + 90
+    while (delivered(spool) != bodies and query.exception() is None
+           and time.time() < deadline):
+        time.sleep(0.3)
+    query.stop()
+    exc = query.exception()
+    out["drain"] = {"delivered": [b.decode() for b in delivered(spool)],
+                    "error": None if exc is None else str(exc)}
+finally:
+    nsqd.stop()
+
+rows = all_queries()["q54_multimodal_decode"].builder(spark, sf_dir).collect()
+out["q54"] = sorted([str(v) for v in r] for r in rows)
 print(json.dumps(out))
 spark.stop()
 """
@@ -316,33 +318,44 @@ spark.stop()
 @pytest.mark.slow
 @pytest.mark.timeout(300)
 def test_source_plans_on_a_session_started_before_the_package(tmp_path):
-    """Why sources/nsq.py is pickled by value. A SparkSession whose JVM
-    started before the package was importable has a Python planner that
-    cannot import it: pickled by reference, the source fails to plan with
-    ModuleNotFoundError. Pickled by value it plans and drains with no
-    shipping at all, so a session that never calls ``pin_session_conf``
-    (``get_spark`` alone ships nothing) still works. Once
-    ``pin_session_conf`` has shipped the package zip, the zip does reach
-    the planner, so the source drains either way."""
+    """The package ships its code inside its pickles and nothing else. On a
+    SparkSession whose JVM started before the package was importable, with
+    nothing shipped: importing the package leaves PYTHONPATH alone; the NSQ
+    source drains through ``build_pipeline`` into a ``KinesisSink`` (the
+    planner, the streaming-source runner and the executor sink workers
+    each unpickle engine code); and q54's mapInPandas function, which calls
+    module-level helpers of ``functions/multimodal.py``, returns the rows
+    its DuckDB oracle does."""
     import json
     import subprocess
     import sys
+
+    import duckdb
+
+    from nsq2kinesis_spark.registry import all_queries
+
+    from .conftest import SF_SMOKE
 
     script = tmp_path / "plan_source.py"
     script.write_text(_PLAN_SOURCE_SCRIPT)
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     proc = subprocess.run(
-        [sys.executable, str(script), repo_root],
+        [sys.executable, str(script), repo_root, SF_SMOKE],
         cwd=tmp_path, env=env, capture_output=True, timeout=280,
     )
     assert proc.returncode == 0, proc.stderr.decode(errors="replace")[-3000:]
     out = json.loads(proc.stdout.decode().strip().splitlines()[-1])
-    for phase in ("unshipped_by_value", "shipped_by_value", "shipped_by_reference"):
-        assert out[phase] == {"seen": 8, "error": None}, (phase, out[phase])
-    unshipped = out["unshipped_by_reference"]
-    assert unshipped["seen"] == 0
-    assert "No module named 'nsq2kinesis_spark'" in unshipped["error"]
+    assert out["pythonpath_unchanged"]
+    assert out["drain"] == {
+        "delivered": sorted(f"body-{i}" for i in range(8)), "error": None
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF_SMOKE}/documents.parquet'"
+    )
+    oracle = con.execute(all_queries()["q54_multimodal_decode"].oracle).fetchall()
+    assert out["q54"] and out["q54"] == sorted([str(v) for v in r] for r in oracle)
 
 
 # --- streaming windowed agg vs batch twin -----------------------------------
@@ -625,6 +638,84 @@ def test_partitioned_sink_one_key_per_aggregate(spark, tmp_path):
         else:
             seen_keys.add(pk)
     assert seen_keys == {"key-0", "key-1", "key-2"}
+
+
+def _stages_run(spark, fn) -> int:
+    """Call ``fn`` inside a fresh job group; the number of Spark stages its
+    jobs ran tasks in."""
+    sc = spark.sparkContext
+    group = f"stages-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    # a stage listed by a later job whose shuffle output already exists is
+    # skipped: it runs no task
+    return sum(1 for s in stages if tracker.getStageInfo(s).numCompletedTasks)
+
+
+def test_sink_stats_are_summed_on_the_driver(spark, tmp_path):
+    """KinesisSink's SinkMetrics match counts taken from the input and the
+    spool, over partitions that are empty, hold an oversize body or
+    deliver, and gathering them adds no stage to the packing job (one
+    stats row per task, summed on the driver, not by a shuffle)."""
+    from nsq2kinesis_spark.streaming.kinesis_sink import SinkMetrics
+
+    max_bytes = 64
+    rows = [(f"body-{i}".encode(), "k") for i in range(10)] + [(b"x" * max_bytes, "k")]
+    # 11 rows over 16 slices: 5 partitions are empty
+    df = spark.sparkContext.parallelize(rows, 16).toDF("body binary, partition_key string")
+    kept = [b for b, k in rows if len(b) + len(k.encode()) <= max_bytes]
+    partitions = df.rdd.glom().collect()
+    assert sum(1 for p in partitions if not p) == 5
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    sink = KinesisSink(
+        stream="t",
+        client_factory=lambda: SpoolingKinesisClient(str(spool)),
+        max_record_bytes=max_bytes,
+    )
+    assert _stages_run(spark, lambda: sink(df, 0)) == 1
+
+    spooled = read_spool(str(spool))
+    delivered = []
+    for _pk, data in spooled:
+        if is_aggregated(data):
+            delivered.extend(d for _, d in deaggregate(data))
+        else:
+            delivered.append(data)
+    assert sorted(delivered) == sorted(kept)
+    assert list(sink.metrics) == [
+        SinkMetrics(
+            n_input=len(rows),
+            n_oversize_dropped=len(rows) - len(kept),
+            n_entries=len(spooled),
+            # one call per partition with a deliverable body
+            n_calls=sum(1 for p in partitions if any(r.body in kept for r in p)),
+            n_retried=0,
+        )
+    ]
+
+    sink(spark.createDataFrame([], "body binary, partition_key string"), 1)
+    assert sink.metrics[-1] == SinkMetrics()
+
+
+def test_sink_metrics_keep_the_newest_epochs(spark, monkeypatch):
+    """KinesisSink.metrics is bounded: past METRICS_KEPT epochs the oldest
+    entries go and the newest epoch's entry is last."""
+    from nsq2kinesis_spark.streaming import kinesis_sink
+
+    monkeypatch.setattr(kinesis_sink, "METRICS_KEPT", 3)
+    sink = KinesisSink(stream="t", client_factory=FakeKinesisClient)
+    for epoch in range(5):
+        # epoch i forwards i + 1 bodies, so n_input names the epoch
+        bodies = [(f"e{epoch}-{i}".encode(),) for i in range(epoch + 1)]
+        sink(spark.createDataFrame(bodies, "body binary"), epoch)
+    assert len(sink.metrics) == 3
+    assert [m.n_input for m in sink.metrics] == [3, 4, 5]
 
 
 # --- forward-path observe metrics (reference running counters) --------------

@@ -86,6 +86,8 @@ def main() -> None:
             for f in sorted(os.listdir(d))
             if f.startswith("events_")
         ]
+        if not cands:
+            sys.exit(f"no events_* file in event-log dir {d}")
         # report the files actually parsed, not just the directory
         # (r14 ADVICE: with multiple rolling files the dir name alone
         # under-describes what the numbers came from)
