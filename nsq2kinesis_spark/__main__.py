@@ -73,28 +73,10 @@ def build_arg_parser() -> argparse.ArgumentParser:
         default=_env_default("SKETCH_TABLE"),
         help="append per-micro-batch hourly HLL distinct-message cells to "
         "this parquet table as the stream runs (env SKETCH_TABLE; see "
-        "streaming/sketch_maintenance.py — compact on a cadence with "
-        "--compact-sketch-every, or externally with --compact-sketch-table: "
-        "the manifest-versioned layout makes either safe beside the live "
-        "stream)",
-    )
-    p.add_argument(
-        "--compact-sketch-every",
-        type=int,
-        default=None,
-        metavar="N",
-        help="with --sketch-table: auto-compact the table every N "
-        "data-bearing epochs inline between micro-batches",
-    )
-    p.add_argument(
-        "--compact-sketch-async",
-        type=float,
-        default=None,
-        metavar="SECONDS",
-        help="with --sketch-table: auto-compact the table every SECONDS "
-        "from a daemon ticker thread beside the stream (the reference's "
-        "Trim()-on-a-goroutine-ticker shape, main.go:110-120; safe by "
-        "the manifest protocol)",
+        "streaming/sketch_maintenance.py). The forwarder never compacts "
+        "it: run the one-shot --compact-sketch-table pass from the "
+        "deployment's scheduler — the manifest-versioned layout makes it "
+        "safe beside the live stream",
     )
     p.add_argument(
         "--compact-sketch-table",
@@ -314,8 +296,6 @@ def main(argv: list[str] | None = None) -> int:
             checkpoint_dir=args.checkpoint_dir,
             trigger_processing_time=args.trigger_interval,
             sketch_table=args.sketch_table,
-            sketch_compact_every=args.compact_sketch_every,
-            sketch_compact_async_s=args.compact_sketch_async,
         ),
     )
 
@@ -336,13 +316,6 @@ def main(argv: list[str] | None = None) -> int:
             query.stop()
             query.awaitTermination()
             break
-    # join the sketch-maintenance compaction ticker AFTER the trigger loop
-    # has stopped (its class docstring requires the close; skipping it
-    # routinely exits the interpreter mid-compaction, turning every
-    # graceful shutdown into a crash-recovery exercise — orphan version
-    # dirs, stale locks)
-    if getattr(query, "maintenance_sink", None) is not None:
-        query.maintenance_sink.close()
     return 0
 
 

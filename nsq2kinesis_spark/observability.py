@@ -115,7 +115,10 @@ class MetricsQueryListener(StreamingQueryListener):
             "input_rows_per_s": p.inputRowsPerSecond,
             "processed_rows_per_s": p.processedRowsPerSecond,
         }
-        # forward-path running counters (pipeline.with_forward_metrics)
+        # forward-path running counters (pipeline.with_forward_metrics):
+        # forward_records counts rows handed to the sink, oversize ones
+        # included — the sink drops those and reports them as
+        # n_oversize_dropped in its batch_delivered event
         observed = p.observedMetrics.get("forward_metrics")
         if observed is not None:
             record["forward_records"] = observed["n_records"]

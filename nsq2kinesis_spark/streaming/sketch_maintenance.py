@@ -42,16 +42,18 @@ Scale notes: the per-batch aggregation is a map-side-combined groupBy on
 (day, hour) — a batch spanning H hours shuffles H sketch blobs, not
 rows; the append writes |cells| tiny parquet files per epoch, the same
 artifact economics q141/q142 prove for the batch side. The file count is
-bounded operationally by ``compact_sketch_table`` — run it on whatever
-cadence the deployment's file budget dictates (hourly against a 1 s
-trigger keeps the listing ~3.6k files), or let the stage itself trigger
-it via ``compact_every_n_epochs``.
+bounded by ``compact_sketch_table``, the one way the table is compacted:
+a one-shot pass (``python -m nsq2kinesis_spark --compact-sketch-table``
+or a library call) run on whatever cadence the deployment's file budget
+dictates (hourly against a 1 s trigger keeps the listing ~3.6k files)
+from the deployment's own scheduler, beside the live stream. The stage
+itself only appends: maintenance stays outside the micro-batch epoch,
+which is the unit of delivery and replay.
 """
 
 from __future__ import annotations
 
 import shutil
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,25 +73,9 @@ class SketchMaintenance:
     ``key_col`` (default the pipeline's dedup hash — distinct messages
     per hour) to the parquet sketch table at ``table_path``. ``inner``
     is the wrapped downstream sink (called FIRST, so a failing delivery
-    fails the epoch before any cells are appended for it).
-
-    ``compact_every_n_epochs`` (round-10): when set, every Nth
-    data-bearing epoch runs ``compact_sketch_table`` right after its
-    append, driver-side between micro-batches — simple, but the pass
-    BLOCKS the next trigger while it runs.
-
-    ``compact_async_interval_s`` (round-10): the reference-faithful
-    shape — its deduper's Trim() runs on its OWN goroutine ticker
-    (reference main.go:110-120), not in the message path. A daemon
-    thread compacts on a wall-clock cadence while epochs keep
-    committing; the manifest protocol makes the overlap safe (appends
-    and swaps serialize only on the commit lock, for microseconds —
-    proven by the concurrent-appender test). A failed pass is recorded
-    on ``last_compaction_error`` and the ticker keeps going: compaction
-    is maintenance — it must never take the delivery path down. Call
-    ``close()`` after stopping the query for a deterministic join; the
-    thread is daemonic so an unclosed stage cannot hang interpreter
-    exit."""
+    fails the epoch before any cells are appended for it). The stage only
+    appends; compaction runs outside the stream, through
+    ``compact_sketch_table``."""
 
     def __init__(
         self,
@@ -97,49 +83,12 @@ class SketchMaintenance:
         key_col: str = "body_hash",
         ts_col: str = "ts",
         inner=None,
-        compact_every_n_epochs: int | None = None,
-        compact_target_files: int = 1,
-        compact_async_interval_s: float | None = None,
     ):
-        if compact_every_n_epochs is not None and compact_every_n_epochs < 1:
-            raise ValueError("compact_every_n_epochs must be >= 1")
-        if compact_async_interval_s is not None and compact_async_interval_s <= 0:
-            raise ValueError("compact_async_interval_s must be > 0")
-        if compact_every_n_epochs and compact_async_interval_s:
-            raise ValueError(
-                "choose ONE compaction trigger: every-N-epochs (inline) "
-                "or async interval (ticker thread)"
-            )
         self.table_path = table_path
         self.key_col = key_col
         self.ts_col = ts_col
         self.inner = inner
-        self.compact_every_n_epochs = compact_every_n_epochs
-        self.compact_target_files = compact_target_files
-        self.compact_async_interval_s = compact_async_interval_s
         self.epochs_applied = 0
-        self.compactions_run = 0
-        self.last_compaction_error: BaseException | None = None
-        self._stop = threading.Event()
-        self._ticker: threading.Thread | None = None
-
-    def _tick(self, spark: SparkSession) -> None:
-        while not self._stop.wait(self.compact_async_interval_s):
-            try:
-                compact_sketch_table(
-                    spark, self.table_path, target_files=self.compact_target_files
-                )
-                self.compactions_run += 1
-            except BaseException as e:  # noqa: BLE001 — maintenance never kills delivery
-                self.last_compaction_error = e
-
-    def close(self) -> None:
-        """Stop the async compaction ticker (no-op otherwise). Call after
-        the streaming query has stopped."""
-        self._stop.set()
-        if self._ticker is not None:
-            self._ticker.join(timeout=120)
-            self._ticker = None
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         if self.inner is not None:
@@ -171,37 +120,6 @@ class SketchMaintenance:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
         self.epochs_applied += 1
-        if (
-            self.compact_every_n_epochs
-            and self.epochs_applied % self.compact_every_n_epochs == 0
-        ):
-            # same never-kill-delivery contract as the async ticker (r10
-            # ADVICE low): an operator legitimately running the
-            # advertised-as-safe external --compact-sketch-table beside
-            # the stream can win the swap race, making this inline pass
-            # raise "concurrent compaction" — the epoch's cells are
-            # already appended, so a failed MAINTENANCE pass must be
-            # recorded, not propagated into foreachBatch.
-            try:
-                compact_sketch_table(
-                    batch_df.sparkSession,
-                    self.table_path,
-                    target_files=self.compact_target_files,
-                )
-                self.compactions_run += 1
-            except BaseException as e:  # noqa: BLE001 — maintenance never kills delivery
-                self.last_compaction_error = e
-        elif self.compact_async_interval_s and self._ticker is None:
-            # lazily start the ticker on the first data-bearing epoch —
-            # foreachBatch is the first place a SparkSession reaches the
-            # stage, and an idle stream needs no maintenance thread
-            self._ticker = threading.Thread(
-                target=self._tick,
-                args=(batch_df.sparkSession,),
-                name=f"sketch-compactor:{self.table_path}",
-                daemon=True,
-            )
-            self._ticker.start()
 
 
 def compact_sketch_table(

@@ -26,6 +26,12 @@ def test_version_and_flag_validation(capsys):
     assert main(["--topic", "t"]) == 1
     assert main(["--stream", "s"]) == 1
     assert main(["--topic", "t", "--stream", "s"]) == 1  # no checkpoint dir
+    # the forwarder never compacts its sketch table: --compact-sketch-table
+    # is the one compaction pass
+    for flag, value in (("--compact-sketch-every", "600"), ("--compact-sketch-async", "5")):
+        with pytest.raises(SystemExit):
+            build_arg_parser().parse_args(["--sketch-table", "x", flag, value])
+    capsys.readouterr()
 
 
 def test_env_fallbacks(monkeypatch):

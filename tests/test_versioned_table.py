@@ -597,57 +597,6 @@ def test_compactor_killed_mid_swap_reads_exactly_old(spark, tmp_path):
     assert got.count() == n and got.agg(F.sum("v")).first()[0] == n * (n - 1)
 
 
-def test_inline_compaction_failure_never_fails_the_epoch(spark, tmp_path, monkeypatch):
-    """r10 ADVICE low: an operator legitimately running the external
-    --compact-sketch-table beside the stream can win the swap race,
-    making the stage's INLINE compact_every_n_epochs pass raise
-    "concurrent compaction" inside foreachBatch. The epoch's cells are
-    already appended, so the failed maintenance pass must land on
-    last_compaction_error (like the async ticker's) — never propagate
-    and take the delivery path down."""
-    from nsq2kinesis_spark.streaming import sketch_maintenance as sm
-
-    table_path = str(tmp_path / "sketches")
-    maint = SketchMaintenance(
-        table_path, key_col="user_id", ts_col="ts", compact_every_n_epochs=1
-    )
-
-    def racing_compactor_won(*a, **k):
-        raise RuntimeError("concurrent compaction detected: manifest moved")
-
-    monkeypatch.setattr(sm, "compact_sketch_table", racing_compactor_won)
-    maint(_batch(spark, "2024-03-04", 0, range(0, 10)), 0)  # must NOT raise
-    assert maint.epochs_applied == 1  # the epoch committed
-    assert maint.compactions_run == 0
-    assert isinstance(maint.last_compaction_error, RuntimeError)
-    # the cells landed despite the failed maintenance pass
-    assert read_sketch_table(spark, table_path).count() == 1
-
-
-def test_auto_compaction_every_n_epochs(spark, tmp_path):
-    """Round-10 stretch (r9 verdict #7): the stage runs its own Trim()
-    analog — compact_every_n_epochs triggers the pass from inside
-    foreachBatch at epoch boundaries, so the reference-shaped ops loop
-    has no manual step left. File count stays bounded while the rollup
-    stays exactly equal to a rebuild."""
-    table_path = str(tmp_path / "sketches")
-    maint = SketchMaintenance(
-        table_path,
-        key_col="user_id",
-        ts_col="ts",
-        compact_every_n_epochs=2,
-        compact_target_files=1,
-    )
-    for epoch in range(6):
-        maint(_batch(spark, "2024-03-04", epoch, range(epoch * 100, epoch * 100 + 30)), epoch)
-    assert maint.compactions_run == 3
-    tbl = read_sketch_table(spark, table_path)
-    assert tbl.count() == 6  # one cell per hour — every append compacted in
-    assert len(tbl.inputFiles()) <= 2  # target 1 + at most one fresh append
-    # 6 disjoint 30-id ranges: exact distinct count answers from the table
-    assert sum(_rollup_map(spark, table_path).values()) == 180
-
-
 def test_lock_root_redirect_for_hostile_filesystems(spark, tmp_path, monkeypatch):
     """NSQ2K_LOCK_ROOT (round 11, closing the NFS residual): a deployment
     whose table filesystem lacks reliable O_CREAT|O_EXCL redirects only
