@@ -87,7 +87,7 @@ def build_arg_parser() -> argparse.ArgumentParser:
         "cells, estimate-exact by HLL union algebra), print the stats "
         "and exit — no topic/stream/checkpoint needed; safe to run "
         "beside a live forwarder (atomic manifest swap, concurrent "
-        "appends absorbed)",
+        "appends absorbed); exits 1 when PATH holds no table",
     )
     p.add_argument(
         "--compact-target-files",
@@ -146,12 +146,11 @@ def make_client_factory(args: argparse.Namespace):
     secret_key = os.environ.get("AWS_SECRET_ACCESS_KEY", "test")
     session_token = os.environ.get("AWS_SESSION_TOKEN")
 
-    # Detect boto3 EAGERLY (factory construction runs in the driver at CLI
-    # startup), so misconfiguration refuses before the streaming query
-    # starts consuming — raising inside the factory would surface as a
-    # failed query after the source is already running. The closures still
-    # re-import boto3 themselves: capturing the module object would make
-    # the factory unpicklable for executor-side construction.
+    # Detect boto3 EAGERLY (factory construction runs at CLI startup), so
+    # misconfiguration refuses before the streaming query starts consuming
+    # — the sink calls the factory once per micro-batch, so raising inside
+    # it would surface as a failed query after the source is already
+    # running.
     try:
         import boto3 as _boto3_probe  # noqa: F401  (presence check only)
 
@@ -209,7 +208,7 @@ def make_client_factory(args: argparse.Namespace):
         return http_factory
 
     def real_endpoint_factory():
-        import boto3  # re-import keeps the closure picklable
+        import boto3
 
         if endpoint and test_mode:
             return boto3.client(
@@ -243,6 +242,9 @@ def main(argv: list[str] | None = None) -> int:
             stats = compact_sketch_table(
                 spark, args.compact_sketch_table, args.compact_target_files
             )
+        except FileNotFoundError as exc:  # no table at that path
+            print(exc, file=sys.stderr)
+            return 1
         finally:
             spark.stop()
         print(_json.dumps({"compacted": args.compact_sketch_table, **stats}))

@@ -13,10 +13,10 @@ accept exactly these requests, so the CLI's ``--kinesis-endpoint`` path now
 runs without boto3, and ``tests/test_kinesis_http.py`` drives it end-to-end
 against a live local HTTP endpoint that re-verifies every signature.
 
-Scale note: the client is a plain picklable dataclass holding only strings —
-each executor task constructs its own connection state per call (PutRecords
-is stateless HTTP), so the sink's parallelism story is unchanged from the
-boto3 path.
+Scale note: the client is a plain dataclass holding only strings and opens
+its connection per call (PutRecords is stateless HTTP). The sink builds one
+per micro-batch on the driver, where it packs, exactly as it builds a boto3
+client.
 """
 
 from __future__ import annotations

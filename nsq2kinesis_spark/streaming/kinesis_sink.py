@@ -3,8 +3,9 @@
 Re-expresses the reference's KinesisBatchWriter semantics (reference
 kinesis_writer.go:52-130) on Spark's execution model:
 
-- per-micro-batch, rows are packed executor-side (mapInPandas — Arrow
-  batches, no driver collect) with the KPL aggregator (streaming/kpl.py);
+- per-micro-batch, rows are collected to the driver and packed there
+  with the KPL aggregator (streaming/kpl.py), like the reference's one
+  batcher goroutine (main.go:105-107);
 - entries ship in PutRecords calls of ≤500 records and ≤4.9 MB
   (kinesis_writer.go:55-57 limits);
 - per-record failures retry selectively with capped backoff — only failed
@@ -17,8 +18,11 @@ kinesis_writer.go:52-130) on Spark's execution model:
 The Kinesis client is injected (``client_factory``) so tests run against an
 in-memory fake; production wires boto3 or the stdlib SigV4 HTTP client
 (kinesis_http.py) — both exercised live in tests/test_kinesis_http.py.
-At 100 TB scale each executor task packs and sends its own partition
-concurrently; no state or data flows through the driver beyond metrics.
+Scale note: the forwarder's one driver-side NSQ reader already holds each
+batch on the driver, at most the source's ``max_records_per_trigger`` rows,
+so collecting it adds no new memory bound and starts no Python worker, and
+the batch needs PutRecords calls by its packed size, not one per partition.
+A parallel reader tier would bring packing back to its executors with it.
 """
 
 from __future__ import annotations
@@ -222,7 +226,6 @@ class KinesisSink:
     client_factory: Callable[[], Any]
     target_size: int = 25_000
     max_record_bytes: int = DEFAULT_MAX_RECORD_BYTES
-    partitioned: bool = False
     max_retries: int = 3
     epoch_guard_dir: str | None = None
     checkpoint_dir: str | None = None
@@ -268,8 +271,6 @@ class KinesisSink:
         )
 
     def __call__(self, batch_df, epoch_id: int) -> None:
-        import pandas as pd
-
         # Epoch guard (optional): foreachBatch replays the last uncommitted
         # epoch after a failure/restart — Spark's contract is at-least-once
         # per epoch with a STABLE epoch_id. Recording the last delivered
@@ -286,81 +287,44 @@ class KinesisSink:
             if epoch_id <= last_delivered:
                 return
 
-        stream = self.stream
-        target = self.target_size
+        # one collect: the batch already sits on the driver (see the
+        # module's scale note), so packing and sending start no Python worker
+        cols = [c for c in ("body", "partition_key") if c in batch_df.columns]
+        rows = batch_df.select(*cols).collect()
         max_bytes = self.max_record_bytes
-        partitioned = self.partitioned
-        max_retries = self.max_retries
-        factory = self.client_factory
-
-        cols = batch_df.columns
-        has_key = "partition_key" in cols
-        selected = batch_df.select("body", "partition_key") if has_key else batch_df.select("body")
-
-        def pack_and_send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            client = factory()
-            agg = KplAggregator(target_size=target)
-            n_input = 0
-            n_dropped = 0
-            buffered: dict[str, KplAggregator] = {}
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    body = bytes(row.body)
-                    key = getattr(row, "partition_key", None)
-                    n_input += 1
-                    # partition keys are capped at 255 chars = at most
-                    # 1020 UTF-8 bytes, so bodies comfortably under the
-                    # limit skip deriving the key (the keyless fallback is
-                    # a pure-Python FNV over the whole body — running it
-                    # per record just for this check would double the hot
-                    # path's hashing cost)
-                    if len(body) + 1020 <= max_bytes:
-                        pk_bytes = 0
-                    else:
-                        pk_bytes = len(
-                            effective_partition_key(body, key).encode("utf-8")
-                        )
-                    if len(body) + pk_bytes > max_bytes:
-                        # Kinesis's 1 MiB per-record limit counts data PLUS
-                        # the UTF-8 partition key; a body within max_bytes
-                        # but over it with the key would be a poison record
-                        # — PutRecords rejects it, the batch fails, and
-                        # Spark replays the same batch forever. Drop and
-                        # count instead (the reference checked body only,
-                        # kinesis_writer.go:167-170 — this closes that gap).
-                        n_dropped += 1
-                        continue
-                    if partitioned:
-                        # PartitionedAggregator (reference partitioned.go stub,
-                        # implemented here): one packer per partition key
-                        pk = effective_partition_key(body, key)
-                        buffered.setdefault(pk, KplAggregator(target_size=target)).put(body, key)
-                    else:
-                        agg.put(body, key)
-            entries = []
-            if partitioned:
-                for sub in buffered.values():
-                    entries.extend(sub.drain())
+        t_pack = time.perf_counter()
+        agg = KplAggregator(target_size=self.target_size)
+        n_dropped = 0
+        for row in rows:
+            body = bytes(row[0])
+            key = row[1] if len(row) > 1 else None
+            # partition keys are capped at 255 chars = at most 1020 UTF-8
+            # bytes, so bodies comfortably under the limit skip deriving the
+            # key (the keyless fallback is a pure-Python FNV over the whole
+            # body — running it per record just for this check would double
+            # the hot path's hashing cost)
+            if len(body) + 1020 <= max_bytes:
+                pk_bytes = 0
             else:
-                entries = agg.drain()
-            n_calls, n_retried = send_entries(client, stream, entries, max_retries=max_retries)
-            yield pd.DataFrame(
-                {
-                    "n_input": [n_input],
-                    "n_oversize_dropped": [n_dropped],
-                    "n_entries": [len(entries)],
-                    "n_calls": [n_calls],
-                    "n_retried": [n_retried],
-                }
-            )
-
-        # one stats row per task, summed here rather than by a shuffle
-        # stage; no rows (no tasks) leaves every count at 0
-        per_task = selected.mapInPandas(
-            pack_and_send,
-            "n_input long, n_oversize_dropped long, n_entries long, n_calls long, n_retried long",
-        ).collect()
-        batch_metrics = SinkMetrics(*(sum(col) for col in zip(*per_task, strict=True)))
+                pk_bytes = len(effective_partition_key(body, key).encode("utf-8"))
+            if len(body) + pk_bytes > max_bytes:
+                # Kinesis's 1 MiB per-record limit counts data PLUS the
+                # UTF-8 partition key; a body within max_bytes but over it
+                # with the key would be a poison record — PutRecords rejects
+                # it, the batch fails, and Spark replays the same batch
+                # forever. Drop and count instead (the reference checked
+                # body only, kinesis_writer.go:167-170 — this closes that
+                # gap).
+                n_dropped += 1
+                continue
+            agg.put(body, key)
+        entries = agg.drain()
+        t_put = time.perf_counter()
+        n_calls, n_retried = send_entries(
+            self.client_factory(), self.stream, entries, max_retries=self.max_retries
+        )
+        t_done = time.perf_counter()
+        batch_metrics = SinkMetrics(len(rows), n_dropped, len(entries), n_calls, n_retried)
         self.metrics.append(batch_metrics)
         # structured per-batch delivery event (reference kinesis_writer.go:
         # 98-112 logs sends/drops/retries the same way)
@@ -376,6 +340,8 @@ class KinesisSink:
             n_entries=batch_metrics.n_entries,
             n_calls=batch_metrics.n_calls,
             n_retried=batch_metrics.n_retried,
+            pack_ms=round((t_put - t_pack) * 1000, 3),
+            put_ms=round((t_done - t_put) * 1000, 3),
         )
         if marker is not None:
             # written only after every chunk delivered — a crash before this

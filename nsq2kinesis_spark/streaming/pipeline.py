@@ -14,11 +14,14 @@ each epoch also appends hourly HLL cells to a sketch table
 (sketch_maintenance.py); compacting that table is a separate one-shot
 pass (``compact_sketch_table``), never part of the stream.
 
-Scale notes: dedup state shards across executors by body_hash (the
-reference serialized every message through one mutex-guarded map,
-deduper.go:18); at 100 TB use the RocksDB state store provider + watermark
-eviction. xxhash64 here (JVM, codegen) vs the reference's FNV-64a — same
-role, no wire compatibility needed for the dedup key.
+Scale notes: the dedup state gets one partition, sized to the one
+driver-side reader that feeds it (at most ``max_records_per_trigger`` rows
+a trigger), so each trigger runs one state-store task rather than one per
+``spark.sql.shuffle.partitions``; a parallel reader tier would bring back
+state sharded by body_hash at that tier's partition count. At 100 TB use
+the RocksDB state store provider + watermark eviction. xxhash64 here (JVM,
+codegen) vs the reference's FNV-64a — same role, no wire compatibility
+needed for the dedup key.
 """
 
 from __future__ import annotations
@@ -105,7 +108,10 @@ def build_pipeline(source_df: DataFrame, sink, config: PipelineConfig):
     ``sink`` is a foreachBatch callable (e.g. KinesisSink). With
     ``config.sketch_table`` set, the sink is wrapped in a
     SketchMaintenance stage that appends hourly distinct-message HLL
-    cells per epoch. Returns the started StreamingQuery.
+    cells per epoch. The query starts with one shuffle partition, so the
+    dedup state runs one task per trigger; the session's own setting is
+    restored at once, and a restarted checkpoint keeps the count its offset
+    log recorded. Returns the started StreamingQuery.
     """
     # let an epoch-guarded sink namespace its markers by this query's id
     if getattr(sink, "checkpoint_dir", "absent") is None:
@@ -115,9 +121,16 @@ def build_pipeline(source_df: DataFrame, sink, config: PipelineConfig):
         from .sketch_maintenance import SketchMaintenance
 
         sink = SketchMaintenance(config.sketch_table, inner=sink)
-    return (
+    writer = (
         transformed.writeStream.foreachBatch(sink)
         .option("checkpointLocation", config.checkpoint_dir)
         .trigger(processingTime=config.trigger_processing_time)
-        .start()
     )
+    # the query copies the session's conf when it starts
+    conf = source_df.sparkSession.conf
+    shuffle_partitions = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        return writer.start()
+    finally:
+        conf.set("spark.sql.shuffle.partitions", shuffle_partitions)

@@ -401,9 +401,14 @@ def republish(spark, table_path: str, rewrite) -> dict[str, int]:
     level (e.g. merge mergeable cells, re-bucket files) because the
     absorb pass re-adds post-snapshot files verbatim beside its output.
 
-    Returns files/cells before and after plus the new version name."""
-    import os
-
+    Returns files/cells before and after plus the new version name.
+    Raises FileNotFoundError, creating nothing, when ``table_path`` holds
+    neither a manifest nor a data file: a mistyped path must not
+    "compact" into a fresh empty table."""
+    if not (os.path.isfile(os.path.join(table_path, MANIFEST)) or _data_files(table_path)):
+        raise FileNotFoundError(
+            f"no table at {table_path}: it holds neither a {MANIFEST} nor a parquet data file"
+        )
     with commit_lock(table_path):
         prev_name = ensure_versioned_locked(table_path)
     prev_dir = os.path.join(table_path, prev_name)

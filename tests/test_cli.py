@@ -296,6 +296,22 @@ def test_cli_sketch_table_flag_end_to_end(spark, tmp_path):
     assert sum(r.approx_distinct for r in after) == len(bodies)
 
 
+@pytest.mark.slow
+@pytest.mark.timeout(180)
+def test_compact_sketch_table_refuses_a_path_with_no_table(tmp_path):
+    """A mistyped --compact-sketch-table path exits non-zero, names the
+    path on stderr and creates nothing there."""
+    missing = tmp_path / "no-such-table"
+    out = subprocess.run(
+        [sys.executable, "-m", "nsq2kinesis_spark",
+         "--compact-sketch-table", str(missing), "--cpus", "1"],
+        cwd=REPO_ROOT, capture_output=True, text=True, timeout=150,
+    )
+    assert out.returncode != 0
+    assert str(missing) in out.stderr
+    assert not missing.exists()
+
+
 def test_http_client_path_requires_explicit_region(monkeypatch):
     """boto3-less + real (non-test) endpoint: a silently-defaulted region
     signs a wrong credential scope and 403s mid-stream, so the factory must

@@ -243,6 +243,9 @@ def test_nsq_to_kinesis_end_to_end(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"), trigger_processing_time="1 second"
     )
     query = build_pipeline(src, sink, config)
+    # the query runs its dedup state in one partition, sized to the one
+    # reader; the session keeps its own setting for batch jobs
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     try:
         deadline = time.time() + 120
         received: list[tuple[str, bytes]] = []
@@ -256,10 +259,12 @@ def test_nsq_to_kinesis_end_to_end(spark, tmp_path):
             if len(received) >= len(bodies) and nsqd.finished:
                 break
             time.sleep(1)
+        progress = query.lastProgress
     finally:
         query.stop()
         nsqd.stop()
 
+    assert [op["numStateStoreInstances"] for op in progress["stateOperators"]] == [1]
     got_bodies = sorted(d for _, d in received)
     assert got_bodies == sorted(bodies.values())  # dedup absorbed redelivery, oversize dropped
     for pk, data in received:
@@ -637,34 +642,6 @@ def test_streaming_cdc_compaction_matches_batch(spark, tmp_path):
     assert any(r[3] for r in expected)
 
 
-# --- partitioned sink mode (reference partitioned.go stub, implemented) -----
-
-
-def test_partitioned_sink_one_key_per_aggregate(spark, tmp_path):
-    """KinesisSink(partitioned=True): every aggregated entry contains
-    records of exactly one partition key (the reference's declared-but-
-    unimplemented PartitionedAggregator, partitioned.go:3-10)."""
-    rows = [(f"m{i}", f"body-{i}".encode(), f"key-{i % 3}") for i in range(30)]
-    df = spark.createDataFrame(rows, "message_id string, body binary, partition_key string")
-    spool = tmp_path / "pspool"
-    spool.mkdir()
-    sink = KinesisSink(
-        stream="t",
-        client_factory=lambda: SpoolingKinesisClient(str(spool)),
-        partitioned=True,
-    )
-    sink(df, 0)
-    seen_keys = set()
-    for pk, data in read_spool(str(spool)):
-        if is_aggregated(data):
-            keys_inside = {k for k, _ in deaggregate(data)}
-            assert keys_inside == {pk}  # single-key aggregate
-            seen_keys |= keys_inside
-        else:
-            seen_keys.add(pk)
-    assert seen_keys == {"key-0", "key-1", "key-2"}
-
-
 def _stages_run(spark, fn) -> int:
     """Call ``fn`` inside a fresh job group; the number of Spark stages its
     jobs ran tasks in."""
@@ -682,12 +659,20 @@ def _stages_run(spark, fn) -> int:
     return sum(1 for s in stages if tracker.getStageInfo(s).numCompletedTasks)
 
 
-def test_sink_stats_are_summed_on_the_driver(spark, tmp_path):
+def test_sink_stats_are_summed_on_the_driver(spark, tmp_path, monkeypatch):
     """KinesisSink's SinkMetrics match counts taken from the input and the
     spool, over partitions that are empty, hold an oversize body or
-    deliver, and gathering them adds no stage to the packing job (one
-    stats row per task, summed on the driver, not by a shuffle)."""
+    deliver. The batch is collected in one single-stage job and packed on
+    the driver, so the PutRecords call count follows the batch's entries,
+    not its partitions, and the batch_delivered event carries the
+    driver's pack and put times."""
+    from nsq2kinesis_spark import observability
     from nsq2kinesis_spark.streaming.kinesis_sink import SinkMetrics
+
+    events = []
+    monkeypatch.setattr(
+        observability, "log_event", lambda _c, event, **fields: events.append((event, fields))
+    )
 
     max_bytes = 64
     rows = [(f"body-{i}".encode(), "k") for i in range(10)] + [(b"x" * max_bytes, "k")]
@@ -718,14 +703,35 @@ def test_sink_stats_are_summed_on_the_driver(spark, tmp_path):
             n_input=len(rows),
             n_oversize_dropped=len(rows) - len(kept),
             n_entries=len(spooled),
-            # one call per partition with a deliverable body
-            n_calls=sum(1 for p in partitions if any(r.body in kept for r in p)),
+            # ten small bodies make one entry, sent in one call
+            n_calls=1,
             n_retried=0,
         )
     ]
+    [(event, fields)] = events
+    assert event == "batch_delivered"
+    assert fields["pack_ms"] >= 0 and fields["put_ms"] >= 0
 
     sink(spark.createDataFrame([], "body binary, partition_key string"), 1)
     assert sink.metrics[-1] == SinkMetrics()
+
+
+def test_sink_packs_in_the_driver_process(spark):
+    """The sink packs and sends in the driver's own process: a client the
+    factory closes over receives every body of a multi-partition batch.
+    Packing in Python workers would deliver to unpickled copies instead."""
+    fake = FakeKinesisClient()
+    bodies = [f"body-{i}".encode() for i in range(12)]
+    df = spark.sparkContext.parallelize([(b,) for b in bodies], 4).toDF("body binary")
+    KinesisSink(stream="t", client_factory=lambda: fake)(df, 0)
+    delivered = []
+    for rec in fake.received:
+        data = bytes(rec["Data"])
+        if is_aggregated(data):
+            delivered.extend(d for _, d in deaggregate(data))
+        else:
+            delivered.append(data)
+    assert sorted(delivered) == sorted(bodies)
 
 
 def test_sink_metrics_keep_the_newest_epochs(spark, monkeypatch):

@@ -418,7 +418,13 @@ def test_compaction_of_empty_table_is_a_noop(spark, tmp_path):
     """A table whose epochs were all empty (or brand-new) compacts as a
     clean no-op — zero stats, no new version, no Spark call over an
     empty path list — and stale-lock husks left by break-by-rename are
-    collected by the next real compaction."""
+    collected by the next real compaction. A path that holds no table at
+    all is refused, and nothing is created there."""
+    for missing in (str(tmp_path / "missing"), str(tmp_path)):
+        with pytest.raises(FileNotFoundError) as refused:
+            compact_sketch_table(spark, missing)
+        assert missing in str(refused.value)
+    assert os.listdir(tmp_path) == []
     table_path = str(tmp_path / "sketches")
     with vt.commit_lock(table_path):
         vt.ensure_versioned_locked(table_path)
@@ -712,6 +718,11 @@ def test_multiwriter_append_contention_is_exact(spark, tmp_path):
     def compact_loop():
         try:
             while not appends_done.is_set():
+                # compaction refuses a path that holds no table yet: join
+                # once the first append has created it
+                if vt.current_version(table_path) is None:
+                    time.sleep(0.01)
+                    continue
                 compact_sketch_table(spark, table_path, target_files=1)
         except BaseException as exc:  # noqa: BLE001
             errors.append(exc)
@@ -797,6 +808,11 @@ def test_multiwriter_contention_under_object_store_rename(
     def compact_loop():
         try:
             while not appends_done.is_set():
+                # compaction refuses a path that holds no table yet: join
+                # once the first append has created it
+                if vt.current_version(table_path) is None:
+                    time.sleep(0.01)
+                    continue
                 compact_sketch_table(spark, table_path, target_files=1)
         except BaseException as exc:  # noqa: BLE001
             errors.append(exc)

@@ -322,6 +322,7 @@ def compaction_impact(n: int, passes: int) -> None:
         PipelineConfig,
         build_pipeline,
     )
+    from nsq2kinesis_spark.versioned_table import current_version
 
     spark = get_spark(app_name="nsq2kinesis_compaction_impact")
     root = tempfile.mkdtemp(prefix="nsq2k_compact_impact_")
@@ -358,6 +359,8 @@ def compaction_impact(n: int, passes: int) -> None:
 
         def compact_beside_stream() -> None:
             while not stop.wait(compact_every_s):
+                if current_version(table) is None:
+                    continue  # no table until the first epoch's cells land
                 try:
                     sm.compact_sketch_table(spark, table)
                     passes_run.append(None)
