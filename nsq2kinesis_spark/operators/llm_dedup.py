@@ -89,8 +89,9 @@ _DUCK_EXACT_PAIRS = f"""
 # shared input artifact of the dedup family — a real pipeline materializes
 # them once and the exact (q75) and LSH (q76) passes both read them.
 # Memoization only dedups the DataFrame object; whether its persisted
-# blocks survive across queries is the caller's policy (bench.py clears
-# caches between unrelated queries but declares this artifact shared).
+# blocks survive across queries is the caller's policy (perfbench's
+# llm_corpus workload clears caches between unrelated jobs but declares
+# this artifact shared).
 _POSTINGS_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -206,13 +207,12 @@ SIZES_BROADCAST_MAX_DOCS = 2_000_000
 # persist entirely; a StorageLevel selects it. Round-15 A/B seam
 # (VERDICT r14 item 1): the driver's cold-JVM protocol measured the q75
 # persist as a LOSS while the builder's same-session CPU A/B measured a
-# win — tools/ab_dedup.py flips this per fresh-JVM variant on the driver's
-# own protocol, and the shipped default is that measured winner.
+# win; a fresh-JVM A/B of the variants picked the shipped default.
 ENRICH_PERSIST_LEVEL: StorageLevel | None = StorageLevel.MEMORY_AND_DISK_DESER
 
 
 # Memoized per sf_dir: the probe must never add a Spark job inside a
-# caller's timed region (bench.py times builder+execute; an eager count
+# caller's timed region (perfbench times builder+execute; an eager count
 # per build would confound exactly the dedup-family timings the hint
 # exists to protect).
 _CORPUS_SIZE_MEMO: dict[str, int] = {}

@@ -80,15 +80,15 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     # Optional comma-list of k=v session confs from the environment —
-    # lets the bench/ladder harnesses A/B STATIC confs (e.g.
-    # spark.io.compression.codec, which cannot be set after session
-    # build) without code edits. Empty/absent = no-op. Applied LAST, so
-    # the env OVERRIDES an explicit extra_conf entry on conflict —
-    # deliberate: the harness invoking the process owns the A/B. Because
-    # the hook fires for every get_spark caller (tests, verification
-    # driver), each applied pair is logged to stderr so a stray
-    # SPARK_GRAFT_CONF left over from a bench A/B can't silently change
-    # engine confs under a parity run.
+    # sets STATIC confs (e.g. spark.io.compression.codec, which cannot be
+    # set after session build) for a deployment or a measurement without
+    # code edits. Empty/absent = no-op. Applied LAST, so the env
+    # OVERRIDES an explicit extra_conf entry on conflict — deliberate:
+    # whoever launches the process owns its confs. Because the hook
+    # fires for every get_spark caller (tests, verification driver),
+    # each applied pair is logged to stderr so a stray SPARK_GRAFT_CONF
+    # left in the environment can't silently change engine confs under
+    # a parity run.
     for kv in os.environ.get("SPARK_GRAFT_CONF", "").split(","):
         if kv.strip():
             k, _, v = kv.partition("=")

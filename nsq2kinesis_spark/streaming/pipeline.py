@@ -67,7 +67,8 @@ def partition_key_transform(df: DataFrame) -> DataFrame:
 
 def forwarding_transform(df: DataFrame, streaming: bool = True) -> DataFrame:
     """The hot path's DataFrame half (dedup → partition key), used by the
-    streaming pipeline (build_pipeline) and bench.py. Bodies over the
+    streaming pipeline (build_pipeline) and, on a batch DataFrame, by
+    tools/streaming_ladder.py's forward_path rung. Bodies over the
     1 MiB record limit pass through: the sink drops and counts them. The
     oracle-checkable batch twins (q60/q64/q65) carry their own expressions
     in operators/streaming_twins.py."""

@@ -206,13 +206,23 @@ def test_frame_parser_survives_any_chunking():
     check()
 
 
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
 @pytest.mark.slow
 @pytest.mark.timeout(180)
-def test_nsq_to_kinesis_end_to_end(spark, tmp_path):
+@pytest.mark.parametrize(
+    "state_provider", [None, ROCKSDB_PROVIDER], ids=["default", "rocksdb"]
+)
+def test_nsq_to_kinesis_end_to_end(spark, tmp_path, state_provider):
     """The reference's whole job as one streaming query: messages (with a
     scripted redelivery and an oversize body) consumed from a live TCP
     fake-nsqd, deduped, packed (KPL), delivered to a spooling PutRecords
-    endpoint; spool deaggregates byte-exact; consumed messages get FINed."""
+    endpoint; spool deaggregates byte-exact; consumed messages get FINed.
+    Runs on the session's state store and on RocksDB, the provider a
+    deployment sets for dedup state that outgrows the heap."""
     from nsq2kinesis_spark.sources.nsq import NsqDataSource
 
     bodies = {f"{i:016d}": f"body-{i}".encode() for i in range(20)}
@@ -242,7 +252,17 @@ def test_nsq_to_kinesis_end_to_end(spark, tmp_path):
     config = PipelineConfig(
         checkpoint_dir=str(tmp_path / "ckpt"), trigger_processing_time="1 second"
     )
-    query = build_pipeline(src, sink, config)
+    provider_key = "spark.sql.streaming.stateStore.providerClass"
+    prev_provider = spark.conf.get(provider_key, None)
+    if state_provider is not None:
+        spark.conf.set(provider_key, state_provider)
+    try:
+        query = build_pipeline(src, sink, config)
+    finally:
+        if prev_provider is None:
+            spark.conf.unset(provider_key)
+        else:
+            spark.conf.set(provider_key, prev_provider)
     # the query runs its dedup state in one partition, sized to the one
     # reader; the session keeps its own setting for batch jobs
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
@@ -265,6 +285,9 @@ def test_nsq_to_kinesis_end_to_end(spark, tmp_path):
         nsqd.stop()
 
     assert [op["numStateStoreInstances"] for op in progress["stateOperators"]] == [1]
+    if state_provider == ROCKSDB_PROVIDER:
+        custom = progress["stateOperators"][0]["customMetrics"]
+        assert any(k.startswith("rocksdb") for k in custom), custom
     got_bodies = sorted(d for _, d in received)
     assert got_bodies == sorted(bodies.values())  # dedup absorbed redelivery, oversize dropped
     for pk, data in received:

@@ -6,7 +6,7 @@ proven by plan shape and lossless-blocking parity — but TESTDATA.md caps
 the shipped data at sf0.1, so nothing had ever been *timed* above it.
 This script builds 1x/2x/4x/8x replicas of the sf0.1 events/documents
 tables by id-shifted union in a scratch dir (/root/testdata is
-read-only), times each heavy query at every rung with the bench's
+read-only), times each heavy query at every rung with a steady-state
 methodology (untimed warmup, clearCache before each timing, min-of-N),
 and fits the growth exponent b in time ~ scale^b per query (least-squares
 slope of log time vs log scale; b ≈ 1 = linear, the design target — the
@@ -58,8 +58,8 @@ from nsq2kinesis_spark.tables import table as t
 SRC_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCRATCH = os.environ.get("SPARK_GRAFT_LADDER_DIR", "/tmp/nsq2k_scale_ladder")
 
-# the five heavy operators the round-7 verdict names, in bench order;
-# the dedup family keeps bench.py's shared-artifact convention (postings
+# the five heavy operators the round-7 verdict names;
+# the dedup family keeps the shared-artifact convention (postings
 # timed once as their own line, q75 reads them uncleared); q80/q82 are
 # the vector-family extension (brute-force vs IVF top-k — replicas keep
 # identical embedding VALUES because fixed-k top-k per a fixed query set

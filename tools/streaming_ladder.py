@@ -1,15 +1,14 @@
 """Streaming scale ladder: MEASURE the streaming half's bounded-state claim.
 
-The batch ladder (tools/scale_ladder.py, round 8) gave every heavy batch
-operator a measured growth exponent; the streaming numbers were still
-single-size (bench.py, 200k rows). This tool measures what the reference
-inherits from its two-generation deduper (deduper.go:17-47 analog) and the
-engine asserts but had never measured above one size:
+The batch ladder (tools/scale_ladder.py) gave every heavy batch operator a
+measured growth exponent. This tool measures what the forwarder inherits
+from the reference's two-generation deduper (deduper.go:17-47 analog) over
+several feed sizes:
 
 1. THROUGHPUT stays flat as the feed grows — records/sec through
-   forward_path (stateless hot path), watermark_dedup (JVM state path:
-   dropDuplicatesWithinWatermark) and stateful_dedup (Python state path:
-   applyInPandasWithState TTL cache) over feed rungs 200k/400k/800k/1.6M
+   forward_path (dedup → partition key → KPL pack → PutRecords to an
+   in-memory client) and watermark_dedup (the forwarder's JVM state path:
+   dropDuplicatesWithinWatermark) over feed rungs 200k/400k/800k/1.6M
    rows at a constant 50% adjacent-duplicate rate.
 2. STATE stays bounded by the WINDOW, not by history — max state-store
    rows (and bytes) per rung, from StreamingQueryProgress.stateOperators.
@@ -17,24 +16,17 @@ engine asserts but had never measured above one size:
    at most 80k ids ≈ 40k duplicate-pair keys regardless of feed length;
    multi-batch execution (maxFilesPerTrigger=1 over N_FILES files) makes
    the watermark actually advance between micro-batches so eviction runs.
-   For the Python path the analogous bound is the processing-time TTL: a
-   short TTL (vs the run's wall span) must cap live keys below the total
-   distinct-key count.
 3. KEY-CARDINALITY axis — same feed size, duplicate factor 1x (all
    unique) / 2x / 8x / 32x: throughput must be insensitive to the dup
    rate and state rows must track keys-in-window, not rows.
 
-Methodology matches bench.py: feed written once outside the timed region,
-fresh checkpoint per run, elapsed measured to the end of the last
-data-bearing batch (bench._data_elapsed), best-of-N. The stateful
-(Python) path never self-terminates (bench.py docstring: timer-cleanup
-batches loop forever), so the ladder stops it after drain; stop-time
-ERROR lines are cosmetic here — this tool's evidence is its JSON lines,
-not a stderr tail.
+Methodology: feed written once outside the timed region, fresh checkpoint
+per run, elapsed measured to the end of the last data-bearing batch
+(_data_elapsed), best-of-N.
 
 Usage:  python tools/streaming_ladder.py [--rungs 200000,400000,800000,1600000]
-        [--passes 2] [--skip-stateful]
-Output: one JSON line per measurement plus markdown tables for NOTES_r09.
+        [--passes 2]
+Output: one JSON line per measurement plus markdown tables.
 """
 
 from __future__ import annotations
@@ -52,15 +44,66 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-import bench
 from nsq2kinesis_spark.session import get_spark
 
 N_FILES = 8  # multi-batch rungs: one file per trigger → N_FILES batches
 
 
+def _iso_to_epoch(ts: str) -> float:
+    """StreamingQueryProgress.timestamp (ISO-8601 UTC, ms precision) →
+    epoch seconds."""
+    import datetime as dt
+
+    fmt = "%Y-%m-%dT%H:%M:%S.%fZ" if "." in ts else "%Y-%m-%dT%H:%M:%SZ"
+    return dt.datetime.strptime(ts, fmt).replace(tzinfo=dt.timezone.utc).timestamp()
+
+
+def _data_elapsed(progresses, start_epoch: float) -> float:
+    """Elapsed seconds from query start to the END of the last
+    data-bearing batch (its trigger-start timestamp + triggerExecution
+    duration). Wall-clock at empty-batch *detection* would also include
+    that empty batch's trigger wait and execution — a constant bias that
+    records throughput low and inflates run-to-run spread on a
+    fast-draining run."""
+    data = [p for p in progresses if p["numInputRows"] > 0]
+    if not data:
+        raise RuntimeError("no data-bearing progress entry — nothing to time")
+    last = data[-1]
+    end = _iso_to_epoch(last["timestamp"]) + last["durationMs"]["triggerExecution"] / 1000.0
+    return max(end - start_epoch, 1e-6)
+
+
+def forward_path_throughput(spark, n: int = 100_000) -> int:
+    """The forwarding hot path as one batch: dedup → partition key →
+    oversize check → KPL pack → chunked PutRecords to an in-memory client,
+    in records/sec on this machine, best of 3 after a warmup. The
+    reference's configured single-instance ceiling is ~500 recs/s
+    (BASELINE.md: 1 batch/s × 500 records)."""
+    from nsq2kinesis_spark.streaming.kinesis_sink import FakeKinesisClient, KinesisSink
+    from nsq2kinesis_spark.streaming.pipeline import forwarding_transform
+
+    df = spark.range(n).select(
+        F.col("id").cast("string").alias("message_id"),
+        F.encode(F.concat(F.lit("body-"), F.col("id")), "UTF-8").alias("body"),
+        F.timestamp_millis(F.col("id") * 10).alias("ts"),
+        F.lit(1).alias("attempts"),
+        F.lit(None).cast("string").alias("key"),
+    )
+    transformed = forwarding_transform(df, streaming=False)
+    sink = KinesisSink(stream="ladder", client_factory=FakeKinesisClient)
+    sink(transformed, 0)  # warmup
+    best = 0.0
+    for epoch in range(1, 4):
+        start = time.perf_counter()
+        sink(transformed, epoch)
+        best = max(best, n / (time.perf_counter() - start))
+    return int(best)
+
+
 def write_feed(spark, root: str, n: int, dup_factor: int) -> str:
     """Feed with ts advancing 3 ms/row and dup_factor rows per body key
-    (adjacent in event time, like bench.py's watermark_dedup feed)."""
+    (adjacent in event time, so the second sighting lands inside the
+    4-minute watermark regardless of batching)."""
     src = os.path.join(root, f"feed_{n}_{dup_factor}")
     if not os.path.isdir(src):
         spark.range(n).select(
@@ -122,68 +165,9 @@ def watermark_dedup_rung(spark, src: str, n: int, passes: int) -> dict:
             if not q.awaitTermination(900):
                 q.stop()
                 raise RuntimeError("watermark rung did not terminate in 900s")
-            rate = n / bench._data_elapsed(q.recentProgress, start_epoch)
+            rate = n / _data_elapsed(q.recentProgress, start_epoch)
             if rate > best:
                 best, stats = rate, _state_stats(q.recentProgress)
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return {"recs_per_s": int(best), **stats}
-
-
-def stateful_dedup_rung(
-    spark, root: str, n: int, passes: int, ttl_s: int = 10
-) -> dict:
-    """Python state path, multi-batch over a SHORT processing-time TTL:
-    at this path's ~13k rec/s a 400k+ feed spans several TTLs of wall
-    time, so timer eviction fires mid-run and max_state_rows measures
-    the generational bound (keys touched within one TTL), not the
-    distinct-key count. Stopped after drain (never self-terminates)."""
-    from nsq2kinesis_spark.streaming.stateful import (
-        DEDUP_OUTPUT_SCHEMA,
-        generational_dedup,
-    )
-
-    src = os.path.join(root, f"hashfeed_{n}")
-    if not os.path.isdir(src):
-        spark.range(n).select(
-            (F.col("id") % (n // 2)).cast("long").alias("body_hash"),
-            F.col("id").cast("string").alias("message_id"),
-            F.timestamp_millis(F.col("id") * 3).alias("ts"),
-        ).coalesce(N_FILES).write.parquet(src)
-
-    best, stats = 0.0, {}
-    for run in range(passes):
-        ckpt = tempfile.mkdtemp(prefix="nsq2k_ladder_sckpt_")
-        try:
-            stream = (
-                spark.readStream.schema(DEDUP_OUTPUT_SCHEMA)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src)
-            )
-            deduped = generational_dedup(stream, ttl_s=ttl_s)
-            start_epoch = time.time()
-            q = (
-                deduped.writeStream.format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(processingTime="1 second")
-                .start()
-            )
-            progresses = []
-            deadline = start_epoch + 900
-            while q.isActive and time.time() < deadline:
-                progresses = q.recentProgress
-                if sum(p["numInputRows"] for p in progresses) >= n:
-                    break
-                time.sleep(0.1)
-            # let one more trigger land so the final batch's state metrics
-            # (and any due timer eviction) are reported, then stop
-            time.sleep(2.5)
-            progresses = q.recentProgress
-            q.stop()
-            q.awaitTermination(60)
-            rate = n / bench._data_elapsed(progresses, start_epoch)
-            if rate > best:
-                best, stats = rate, _state_stats(progresses)
         finally:
             shutil.rmtree(ckpt, ignore_errors=True)
     return {"recs_per_s": int(best), **stats}
@@ -327,7 +311,7 @@ def compaction_impact(n: int, passes: int) -> None:
     spark = get_spark(app_name="nsq2kinesis_compaction_impact")
     root = tempfile.mkdtemp(prefix="nsq2k_compact_impact_")
     src = os.path.join(root, f"msg_feed_{n}")
-    # 50% duplicate bodies adjacent in event time (the bench feed shape);
+    # 50% duplicate bodies adjacent in event time (the ladder feed shape);
     # MESSAGE_SCHEMA columns so build_pipeline runs its real transform
     spark.range(n).select(
         F.col("id").cast("string").alias("message_id"),
@@ -385,7 +369,7 @@ def compaction_impact(n: int, passes: int) -> None:
                 time.sleep(0.05)
             else:
                 raise RuntimeError(f"{tag}: feed not drained in 900s")
-            rate = n / bench._data_elapsed(q.recentProgress, start_epoch)
+            rate = n / _data_elapsed(q.recentProgress, start_epoch)
         finally:
             q.stop()
             q.awaitTermination(60)
@@ -440,7 +424,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rungs", default="200000,400000,800000,1600000")
     ap.add_argument("--passes", type=int, default=2)
-    ap.add_argument("--skip-stateful", action="store_true")
     ap.add_argument(
         "--oom-regime",
         action="store_true",
@@ -461,7 +444,7 @@ def main() -> None:
         "--state-provider",
         choices=["default", "rocksdb"],
         default="default",
-        help="state store for the watermark/stateful paths — 'rocksdb' is "
+        help="state store for the watermark dedup path — 'rocksdb' is "
         "the production spill-to-disk config (round-9 A/B at 400k: "
         "~9-14%% slower than the on-heap default, identical state rows)",
     )
@@ -508,7 +491,7 @@ def main() -> None:
                     "axis": "feed_size",
                     "op": "forward_path",
                     "n": n,
-                    "recs_per_s": bench.forward_path_throughput(spark, n),
+                    "recs_per_s": forward_path_throughput(spark, n),
                 }
             )
             emit(
@@ -519,15 +502,6 @@ def main() -> None:
                     **watermark_dedup_rung(spark, src, n, args.passes),
                 }
             )
-            if not args.skip_stateful:
-                emit(
-                    {
-                        "axis": "feed_size",
-                        "op": "stateful_dedup",
-                        "n": n,
-                        **stateful_dedup_rung(spark, root, n, args.passes),
-                    }
-                )
         # axis 2: key cardinality at fixed feed size
         n2 = rungs[1] if len(rungs) > 1 else rungs[0]
         for dup in (1, 2, 8, 32):
